@@ -19,8 +19,17 @@ snapshot commit):
 
 A crash in any window either leaves no visible output (pre-marker) or a
 fully-committed increment (post-marker); restarts are idempotent either way.
-At 10^12-doc scale the processed set is huge; both sides are bucketed by
-xxhash64(url) so an Iceberg storage-partitioned join avoids the shuffle.
+
+Shuffles. On a fresh base read_processed is an empty relation the optimizer
+can see, so the anti-join is pruned and nothing shuffles before the analyzer
+UDF. What does shuffle carries derived columns, never html: analyze_pages'
+(sha, url) dedup aggregate, the bucket rebalance of the analysis write and
+commit_lineage's per-bucket counters. A resumed run plans the (url, sha)
+anti-join, whose two Exchanges carry the whole page row, html included,
+unless the processed side is small enough to broadcast. At 10^12-doc scale
+the processed set is huge; bucketing both sides by xxhash64(url) in an
+Iceberg table would let a storage-partitioned join skip that shuffle — the
+parquet stand-in does not.
 
 Spark's own df.checkpoint() is NOT the mechanism — it is not durable across
 applications (SURVEY.md §4.2 item 5).
@@ -164,18 +173,21 @@ def read_processed(
     spark: SparkSession, base: str, as_of: dt.datetime | None = None
 ) -> DataFrame:
     """The committed processed set (uncommitted appends filtered out);
-    ``as_of`` reads the historical snapshot (list_committed_as_of)."""
+    ``as_of`` reads the historical snapshot (list_committed_as_of). Only no
+    commits or a missing processed directory mean "nothing processed"; any
+    other read error propagates, since an empty set would re-analyze and
+    re-commit every page."""
     p = _processed_path(base)
     committed = sorted(
         list_committed_as_of(base, as_of) if as_of else list_committed(base)
     )
-    try:
-        df = spark.read.schema(S.PROCESSED).parquet(p)
-    except Exception:
-        return spark.createDataFrame([], S.PROCESSED)
-    if not committed:
-        return spark.createDataFrame([], S.PROCESSED)
-    return df.where(F.col("run_id").isin(committed))
+    if not committed or not os.path.isdir(p):
+        # limit(0), not a bare createDataFrame([]): the optimizer sees the
+        # relation is empty and prunes the anti-join (and its shuffles)
+        return spark.createDataFrame([], S.PROCESSED).limit(0)
+    return spark.read.schema(S.PROCESSED).parquet(p).where(
+        F.col("run_id").isin(committed)
+    )
 
 
 def filter_unprocessed(pages: DataFrame, processed: DataFrame) -> DataFrame:
@@ -417,7 +429,7 @@ def run_resumable(
     commit. Returns the increment's (no longer cached) analysis DataFrame —
     re-evaluating it re-runs the pipeline; read committed results back via
     read_analysis. Re-running with identical input is a no-op."""
-    from fa_spark.pipeline import JobConfig, analyze_pages
+    from fa_spark.pipeline import JobConfig, analyze_pages, write_analysis
 
     validate_run_id(run_id)
     cfg = cfg or JobConfig(run_id=run_id)
@@ -428,8 +440,11 @@ def run_resumable(
     analysis = analysis.persist()
     n = analysis.count()
     if n:
-        analysis.write.mode("append").partitionBy("run_id", "bucket").parquet(
-            _analysis_path(base)
+        # the increment owns its run_id=<id>/ directory, so the on-disk
+        # layout matches a partitionBy("run_id", "bucket") write
+        write_analysis(
+            analysis.drop("run_id"),
+            os.path.join(_analysis_path(base), f"run_id={run_id}"),
         )
         commit_lineage(analysis, base, run_id, committed_at)
         write_commit_marker(base, run_id, committed_at)

@@ -2,14 +2,14 @@
 
 The reference's `FileAnalyzer.analyze()` fan-out
 (/root/reference/src/core/analyzer.py:66-124) becomes one lazy DataFrame
-chain: a single fused Arrow stage for all per-row analyzers, then exactly
-one shuffle for dedup and one for tag ranking.
+chain: a single fused Arrow stage for all per-row analyzers (tag ranking
+included), then exactly one shuffle for dedup.
 
-Sink strategy: Iceberg (`writeTo(...).append()`) when an Iceberg catalog is
-configured on the session; otherwise hash-bucketed parquet with an explicit
-`bucket` column — `pmod(xxhash64(url), B)` — which keeps the
-partition-to-task mapping stable for lineage (the local stand-in for Iceberg
-`PARTITIONED BY (bucket(B, url))`, SURVEY.md §4.2).
+Sink strategy: hash-bucketed parquet with an explicit `bucket` column —
+`pmod(xxhash64(url), B)` — which keeps the partition-to-task mapping stable
+for lineage (the local stand-in for Iceberg `PARTITIONED BY (bucket(B,
+url))`, SURVEY.md §4.2). write_analysis is the one sink; Iceberg's
+`writeTo(...).append()` would replace it where a catalog is configured.
 """
 
 from __future__ import annotations
@@ -85,11 +85,16 @@ def bucket_col(url_col: str = "url", buckets: int = DEFAULT_BUCKETS):
 def analyze_pages(pages_df: DataFrame, cfg: JobConfig = JobConfig()) -> DataFrame:
     """Full per-page analysis + exact dedup + tags + slug.
 
-    Shuffle census (scale review): exactly ONE shuffle — the sha dedup
-    window. Tag ranking is a per-row top-k over the doc's own tokens, so it
-    is computed inside the fused Arrow stage (a groupBy+window+join version
-    doubled the Python stage and added two shuffles — measured 2× slower).
-    The html blob dies at the UDF boundary — only derived columns shuffle.
+    Shuffle census (scale review): exactly ONE shuffle — the (sha, url)
+    partial aggregate that elects canonical rows, computed from a narrow
+    projection of the page bytes and broadcast back to the analyzed rows.
+    No Exchange sits before the UDF. Tag ranking is a per-row top-k over the
+    doc's own tokens, so it is computed inside the fused Arrow stage (a
+    groupBy+window+join version doubled the Python stage and added two
+    shuffles — measured 2× slower). The html blob dies at the UDF boundary
+    — only derived columns shuffle. lineage.run_resumable adds the bucket
+    rebalance of write_analysis, and on a resumed run the (url, sha)
+    anti-join (see the lineage module docstring).
     """
     analyzed = with_analysis(pages_df).withColumn(
         "bucket", bucket_col("url", cfg.buckets)
@@ -107,8 +112,17 @@ def analyze_pages(pages_df: DataFrame, cfg: JobConfig = JobConfig()) -> DataFram
 
 def write_analysis(df: DataFrame, path: str, mode: str = "append") -> None:
     """Bucketed parquet sink (Iceberg stand-in). Bucket column doubles as the
-    lineage partition key."""
-    df.write.mode(mode).partitionBy("bucket").parquet(path)
+    lineage partition key.
+
+    The REBALANCE hint on ``bucket`` is the stand-in for Iceberg's hash
+    write distribution: one shuffle of the derived columns puts each bucket
+    in one task, so a small increment writes one file per bucket instead of
+    one per (task, bucket), and AQE splits a bucket above the advisory
+    partition size. It sits on the write only — a cached ``df`` keeps its
+    own partitioning for the caller's other actions."""
+    df.hint("rebalance", "bucket").write.mode(mode).partitionBy("bucket").parquet(
+        path
+    )
 
 
 def summary(df: DataFrame) -> DataFrame:

@@ -8363,10 +8363,10 @@ def extract_zip_document_text(data: bytes) -> "ExtractResult":
             is_epub = "META-INF/container.xml" in names
             if not is_epub and "mimetype" in names:
                 try:
-                    is_epub = (
-                        z.read("mimetype")[:64].strip()
-                        == b"application/epub+zip"
-                    )
+                    # open().read(64) inflates only the prefix; z.read()
+                    # would inflate the whole (possibly bomb) member
+                    with z.open("mimetype") as f:
+                        is_epub = f.read(64).strip() == b"application/epub+zip"
                 except Exception:
                     is_epub = False
     except Exception:
@@ -8393,7 +8393,8 @@ def _parse_zip_meta(data: bytes) -> dict[str, str]:
         with _zipfile.ZipFile(_io2.BytesIO(data)) as z:
             names = z.namelist()
             if "mimetype" in names:
-                mimetype = z.read("mimetype")[:64].decode("ascii", "replace")
+                with z.open("mimetype") as f:  # prefix only, bomb-safe
+                    mimetype = f.read(64).decode("ascii", "replace")
     except Exception:
         return {"zip:valid": "false"}
     out = {

@@ -288,3 +288,30 @@ def test_stub_counters_in_lineage(spark, pages_df, base):
         for k, v in (row["stubbed_types"] or {}).items():
             by_type[k] = by_type.get(k, 0) + v
     assert by_type == {"mp3": 2, "mp4": 1, "ogg": 1, "riff": 1}
+
+
+def test_read_processed_propagates_read_errors(spark, pages_df, base, monkeypatch):
+    """Only a missing _lineage/processed directory reads as the empty set;
+    any other read failure propagates instead of making the job re-analyze
+    and re-commit every page."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    pages = pages_df.select("url", "warc_ts", "html", "text", "lang").limit(10)
+    lineage.run_resumable(spark, pages, base, "run-1", TS1)
+
+    def broken(self, *paths, **options):
+        raise OSError("listing failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", broken)
+        with pytest.raises(OSError, match="listing failed"):
+            lineage.read_processed(spark, base)
+        # nothing committed: empty without touching the reader
+        fresh = os.path.join(os.path.dirname(base), "fresh")
+        assert lineage.read_processed(spark, fresh).count() == 0
+
+    assert lineage.read_processed(spark, base).count() == 10
+    shutil.rmtree(os.path.join(base, "_lineage", "processed"))
+    assert lineage.read_processed(spark, base).count() == 0

@@ -57,6 +57,26 @@ def test_flagship_blob_never_shuffled(spark, pages_df):
             assert "html" not in line, line
 
 
+def test_resumable_fresh_run_prunes_anti_join(spark, pages_df, tmp_path):
+    """A fresh increment of run_resumable plans no (url, sha) anti-join:
+    the empty processed set is visible to the optimizer, so no Exchange
+    carries the html blob. Against a committed base the anti-join stays."""
+    import datetime as dt
+
+    from fa_spark import lineage
+
+    ts = dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc)
+    base = str(tmp_path / "out")
+    pages = pages_df.select("url", "warc_ts", "html", "text", "lang").limit(50)
+    fresh = _plan(lineage.run_resumable(spark, pages, base, "r1", ts))
+    assert "LeftAnti" not in fresh, fresh
+    for line in fresh.splitlines():
+        if "Exchange" in line:
+            assert "html" not in line, line
+    resumed = _plan(lineage.run_resumable(spark, pages, base, "r2", ts))
+    assert "LeftAnti" in resumed, resumed
+
+
 def test_dataset_split_zero_exchange(spark):
     from fa_spark.queries import REGISTRY
 

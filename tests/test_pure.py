@@ -1911,6 +1911,34 @@ def test_epub_routing_and_budget():
     assert len(out.text) <= pure.EPUB_WALK_MAX_BYTES + (1 << 16)
 
 
+def test_zip_mimetype_bomb_read_is_bounded():
+    """A deflated 'mimetype' member at >= 1000:1 is read by its 64-byte
+    prefix only: neither EPUB routing nor the zip metadata walk inflates
+    the whole member (ADVICE: z.read("mimetype")[:64])."""
+    import io
+    import tracemalloc
+    import zipfile
+
+    member = b"application/epub+zip" + b" " * (32 << 20)
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+        z.writestr("mimetype", member)
+    data = buf.getvalue()
+    del member
+    assert (32 << 20) // len(data) >= 1000
+
+    tracemalloc.start()
+    try:
+        meta = pure.extract_metadata(data)
+        ex = pure.extract_main_text(data)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+    assert meta["zip:valid"] == "true" and meta["zip:subtype"] == "epub"
+    assert ex.doc_type == "epub"
+
+
 def test_woff_rejects_incomplete_zlib_table():
     """Round 9 (ADVICE r8): a compressed WOFF table whose zlib stream is
     truncated (or disagrees with origLength) is rejected, not parsed with
