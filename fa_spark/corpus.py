@@ -78,7 +78,13 @@ def build_corpus(
     after return would re-run the whole pipeline (UDF per join branch)
     because this function releases every cache before returning.
     """
-    analysis = analyze_pages(pages_df, cfg.job).persist()
+    # only the analysis fields read below are computed
+    analysis = analyze_pages(
+        pages_df,
+        cfg.job,
+        fields=("extract", "minhash", "quality", "detected_lang",
+                "n_tokens_ws", "n_tokens_bpe", "tags"),
+    ).persist()
 
     c_extracted = F.col("extract.status").isin(
         "success", "success_lenient"

@@ -14,13 +14,12 @@ url))`, SURVEY.md §4.2). write_analysis is the one sink; Iceberg's
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fa_spark.stages.analyze import content_pages, with_analysis
+from fa_spark.stages.analyze import FIELDS, content_pages, with_analysis
 from fa_spark.stages.dedup import exact_dedup
 
 DEFAULT_BUCKETS = 64
@@ -64,12 +63,8 @@ def default_session(
         # per-partition, so it is scale-adaptive, not a local[32] tune:
         # 64 MB build per partition is modest for multi-GB executors and
         # AQE falls back to sort-merge when partitions exceed it.
-        # Production values are env-overridable.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("FA_SPARK_SHJ_LOCAL_MAP", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", "8g")
@@ -82,8 +77,11 @@ def bucket_col(url_col: str = "url", buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64(url_col), F.lit(buckets)).cast("int")
 
 
-def analyze_pages(pages_df: DataFrame, cfg: JobConfig = JobConfig()) -> DataFrame:
-    """Full per-page analysis + exact dedup + tags + slug.
+def analyze_pages(
+    pages_df: DataFrame, cfg: JobConfig = JobConfig(), fields=FIELDS
+) -> DataFrame:
+    """Per-page analysis of ``fields`` (stages.analyze.FIELDS, all by
+    default) + exact dedup + tags + slug.
 
     Shuffle census (scale review): exactly ONE shuffle — the (sha, url)
     partial aggregate that elects canonical rows, computed from a narrow
@@ -96,7 +94,7 @@ def analyze_pages(pages_df: DataFrame, cfg: JobConfig = JobConfig()) -> DataFram
     rebalance of write_analysis, and on a resumed run the (url, sha)
     anti-join (see the lineage module docstring).
     """
-    analyzed = with_analysis(pages_df).withColumn(
+    analyzed = with_analysis(pages_df, fields).withColumn(
         "bucket", bucket_col("url", cfg.buckets)
     )
     # narrow stats source (round 9): the canonical-election aggregate needs

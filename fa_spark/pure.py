@@ -27,6 +27,7 @@ import re
 import struct as _struct
 import zlib
 from collections import Counter
+from collections.abc import Collection
 from dataclasses import dataclass, field
 from html import unescape
 from html.parser import HTMLParser
@@ -2681,6 +2682,7 @@ def _huff_canonical(bits: list[int], vals: list[int]) -> dict[tuple[int, int], i
     return table
 
 
+# both Huffman caches hand out shared objects: callers must not mutate them
 _HUFF_TABLES_CACHE: dict = {}
 _HUFF_TABLES_CACHE_MAX = 256
 
@@ -2713,6 +2715,7 @@ def _huff_tables(bits: list[int], vals: list[int]):
 
 
 _HUFF_ENCODER_CACHE: dict = {}
+_HUFF_ENCODER_CACHE_MAX = 256
 
 
 def _huff_encoder(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -2724,7 +2727,7 @@ def _huff_encoder(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]
     if hit is not None:
         return hit
     enc = {sym: (code, ln) for (ln, code), sym in _huff_canonical(bits, vals).items()}
-    if len(_HUFF_ENCODER_CACHE) < _HUFF_TABLES_CACHE_MAX:
+    if len(_HUFF_ENCODER_CACHE) < _HUFF_ENCODER_CACHE_MAX:
         _HUFF_ENCODER_CACHE[key] = enc
     return enc
 
@@ -12914,12 +12917,10 @@ def _metadata_from_parse(
 
 
 def _extract_with_ctx(b: bytes):
-    """Shared decode+DOM+extract path of analyze_document (round 9 — the
-    extract-only queries run this alone instead of the full fused
-    analyzer): returns (sniff, ExtractResult, html_ctx) where html_ctx is
+    """Decode+DOM+extract step that every analyze_document call runs:
+    returns (sniff, ExtractResult, html_ctx) where html_ctx is
     (ct, charset, parser) for html/text/xml inputs (what
-    _metadata_from_parse needs) and None otherwise. Verbatim extraction of
-    the former analyze_document branch — field-for-field identical."""
+    _metadata_from_parse needs) and None otherwise."""
     sn = sniff_bytes(b)
     ct = sn["content_type"]
 
@@ -12959,12 +12960,18 @@ def _extract_with_ctx(b: bytes):
 
 def analyze_document(
     data: bytes | None, minhash_k: int = 64, skip_simhash: bool = False,
-    skip_minhash: bool = False,
+    skip_minhash: bool = False, fields: Collection[str] | None = None,
 ) -> dict:
     """ONE pass per document: decode once, parse the DOM once, tokenize the
     extracted text once; every analyzer consumes the shared intermediates.
     Field-for-field identical to calling the individual functions (pinned by
     tests/test_pure.py::test_fused_equals_individual).
+
+    ``fields``: the analysis fields (``stages.analyze.FIELDS`` names) the
+    caller reads, None for all. Sniff and extract always run; every later
+    step runs only when a requested field needs it, and the result holds
+    only the keys computed, each equal to the same key of the full result.
+    Both ``n_tokens_ws`` and ``n_tokens_bpe`` read "token_count".
 
     ``skip_simhash``: the batch caller computes simhash for the WHOLE
     Arrow batch in one reduceat pass (_simhash_toks_batch, round 4) — the
@@ -12972,40 +12979,44 @@ def analyze_document(
     ``skip_minhash`` (round 7): same batching for minhash — "minhash" is
     None and "mh_windows" carries the raw _shingle_windows array (None
     for empty text) for _minhash_windows_batch."""
+    want = None if fields is None else frozenset(fields)
+
+    def needs(*names: str) -> bool:
+        return want is None or not want.isdisjoint(names)
+
     b = data if data is not None else b""
     sn, ex, html_ctx = _extract_with_ctx(b)
-    if html_ctx is not None:
-        ct, cs, parser = html_ctx
-        meta = _metadata_from_parse(b, ct, cs, parser, ex.title)
-    else:
-        meta = extract_metadata(b)
+    d: dict = {"sniff": sn, "extract": ex}
+    if needs("meta"):
+        if html_ctx is not None:
+            ct, cs, parser = html_ctx
+            d["meta"] = _metadata_from_parse(b, ct, cs, parser, ex.title)
+        else:
+            d["meta"] = extract_metadata(b)
 
     text = ex.text
-    toks = tokenize(text)
-    if skip_minhash:
-        mh = None
-        mh_windows = _shingle_windows(toks, 5) if text else None
-    else:
-        mh = (
-            _minhash_shingles(_shingle_windows(toks, 5), minhash_k)
-            if text
-            else [0] * 0
-        )
-        mh_windows = None
-    return {
-        "sniff": sn,
-        "meta": meta,
-        "extract": ex,
-        "toks": toks,
-        "quality": _quality_toks(text, toks),
-        "detected_lang": _detect_lang_toks(toks),
-        "minhash": mh,
-        "mh_windows": mh_windows,
-        "simhash": 0 if skip_simhash else (_simhash_toks(toks) if text else 0),
-        "tags": clean_tags(toks),
-        "slug": page_slug(ex.title, text),
-        "token_count": token_count(text),
-    }
+    if needs("simhash", "minhash", "quality", "detected_lang", "tags"):
+        toks = d["toks"] = tokenize(text)
+        if needs("quality"):
+            d["quality"] = _quality_toks(text, toks)
+        if needs("detected_lang"):
+            d["detected_lang"] = _detect_lang_toks(toks)
+        if needs("minhash"):
+            windows = _shingle_windows(toks, 5) if text else None
+            if skip_minhash:
+                d["minhash"], d["mh_windows"] = None, windows
+            else:
+                mh = _minhash_shingles(windows, minhash_k) if text else []
+                d["minhash"], d["mh_windows"] = mh, None
+        if needs("simhash"):
+            d["simhash"] = _simhash_toks(toks) if text and not skip_simhash else 0
+        if needs("tags"):
+            d["tags"] = clean_tags(toks)
+    if needs("slug"):
+        d["slug"] = page_slug(ex.title, text)
+    if needs("n_tokens_ws", "n_tokens_bpe"):
+        d["token_count"] = token_count(text)
+    return d
 
 
 # ---------------------------------------------------------------------------

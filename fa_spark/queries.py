@@ -28,12 +28,7 @@ from pyspark.sql.types import (
 
 from fa_spark import pure
 from fa_spark.stages import similarity
-from fa_spark.stages.analyze import (
-    minhash_udf,
-    page_analysis,
-    page_extract,
-    simhash_udf,
-)
+from fa_spark.stages.analyze import analysis_udf, minhash_udf, simhash_udf
 from fa_spark.stages.dedup import minhash_band_pairs, simhash_near_dups
 from fa_spark.stages.tags import GENERIC_TAGS, filename_udf, tokens_expr, top_tags
 from fa_spark.stages.text import detect_lang_expr, jaccard_pairs, ngram_sets
@@ -1117,17 +1112,13 @@ def q_extract_synth(spark, sf_dir):
     the oracle computes the expected extraction analytically in SQL — a
     value-level check on the extractor's block-classification contract."""
     pages = _spread(_synth_pages(spark, sf_dir))
-    # page_extract (round 9): only extract.* is consumed — the narrow
-    # fused pass shares the extract kernel with page_analysis but skips
-    # signatures/tags/quality/meta and ships 6 strings over Arrow instead
-    # of the full analysis struct (5.4× less Python per doc, measured)
-    return pages.withColumn("a", page_extract("html")).select(
+    return pages.withColumn("a", analysis_udf(("extract",))("html")).select(
         "doc_id",
-        F.col("a.text").alias("ext_text"),
-        F.col("a.doc_type").alias("doc_type"),
-        F.col("a.status").alias("status"),
-        F.col("a.title").alias("title"),
-        F.col("a.description").alias("description"),
+        F.col("a.extract.text").alias("ext_text"),
+        F.col("a.extract.doc_type").alias("doc_type"),
+        F.col("a.extract.status").alias("status"),
+        F.col("a.extract.title").alias("title"),
+        F.col("a.extract.description").alias("description"),
     )
 
 
@@ -1186,16 +1177,14 @@ def q_pdf_extract(spark, sf_dir):
     extracted text/title/status, value-checked against the analytically
     expected layout lines."""
     pages = _spread(_synth_pdfs(spark, sf_dir))
-    # page_extract (round 9): same narrowing as q_extract_synth — only
-    # extract.* + sniff.content_type are consumed here
-    return pages.withColumn("a", page_extract("html")).select(
+    return pages.withColumn("a", analysis_udf(("sniff", "extract"))("html")).select(
         "doc_id",
-        F.col("a.text").alias("ext_text"),
-        F.col("a.doc_type").alias("doc_type"),
-        F.col("a.status").alias("status"),
-        F.col("a.title").alias("title"),
-        F.col("a.description").alias("description"),
-        F.col("a.content_type").alias("content_type"),
+        F.col("a.extract.text").alias("ext_text"),
+        F.col("a.extract.doc_type").alias("doc_type"),
+        F.col("a.extract.status").alias("status"),
+        F.col("a.extract.title").alias("title"),
+        F.col("a.extract.description").alias("description"),
+        F.col("a.sniff.content_type").alias("content_type"),
     )
 
 

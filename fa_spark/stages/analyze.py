@@ -7,9 +7,17 @@ ONE Arrow-batched pass: decode each page's bytes once, derive every column
 family (sniff, meta, extract, sigs, fingerprints, quality) from that single
 decode. Inter-stage independence (SURVEY.md §3.2) is what makes the fusion
 legal; the only operators needing a shuffle (dedup, tags) stay outside.
+
+``_COLUMNS`` is the one field table: each analysis field maps to the
+function that builds its column from a batch of pure.analyze_document
+results. A caller names the fields it reads (``analysis_udf(fields)``,
+``with_analysis(pages, fields)``); only those columns are built and cross
+Arrow, and analyze_document runs only the steps they need.
 """
 
 from __future__ import annotations
+
+import functools
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -20,28 +28,6 @@ from fa_spark import schema as S
 
 # compiled once per Python worker process
 _COMPILED_SIGS = pure.compile_signatures()
-
-_ANALYSIS_FIELDS = [
-    "sniff", "meta", "extract", "sigs", "simhash", "minhash", "quality",
-    "detected_lang", "n_tokens_ws", "n_tokens_bpe", "tags", "slug",
-]
-
-ANALYSIS_STRUCT = StructType(
-    [
-        S.ANALYSIS["sniff"],
-        S.ANALYSIS["meta"],
-        S.ANALYSIS["extract"],
-        S.ANALYSIS["sigs"],
-        S.ANALYSIS["simhash"],
-        S.ANALYSIS["minhash"],
-        S.ANALYSIS["quality"],
-        S.ANALYSIS["detected_lang"],
-        S.ANALYSIS["n_tokens_ws"],
-        S.ANALYSIS["n_tokens_bpe"],
-        S.ANALYSIS["tags"],
-        S.ANALYSIS["slug"],
-    ]
-)
 
 _SIGNED64_MASK = (1 << 64) - 1
 
@@ -55,115 +41,105 @@ def _to_i64(x: int) -> int:
 MINHASH_K = 64
 
 
-def analyze_batch(html: pd.Series) -> pd.DataFrame:
-    """One Arrow batch of raw page bytes -> full analysis columns.
+def _sniff_col(docs: list[dict]) -> list:
+    return [
+        {
+            "content_type": sn["content_type"],
+            "charset": sn["charset"],
+            "embedded": [{"offset": off, "kind": kind} for off, kind in sn["embedded"]],
+            "interesting": sn["interesting"],
+        }
+        for sn in (d["sniff"] for d in docs)
+    ]
+
+
+def _simhash_col(docs: list[dict]) -> list:
+    # computed for the whole batch in one reduceat pass
+    # (pure._simhash_toks_batch) — bit-identical, ~4x cheaper than
+    # per-doc numpy setup
+    toks = [d["toks"] if d["extract"].text else [] for d in docs]
+    return [_to_i64(s) for s in pure._simhash_toks_batch(toks)]
+
+
+def _minhash_col(docs: list[dict]) -> list:
+    # like simhash, one reduceat pass for the whole batch
+    # (pure._minhash_windows_batch, round 7 — bit-identical, drops the
+    # per-doc (seeds, windows) broadcast setup); empty-text docs keep the
+    # per-doc form's [] signature
+    sigs = pure._minhash_windows_batch(
+        [d["mh_windows"] for d in docs], MINHASH_K, signed=True
+    )
+    return [[] if sig is None else sig for sig in sigs]
+
+
+def _key(key: str):
+    return lambda docs: [d[key] for d in docs]
+
+
+# analysis field -> its column from a batch of analyze_document results
+_COLUMNS = {
+    "sniff": _sniff_col,
+    "meta": _key("meta"),
+    # ExtractResult's fields are the EXTRACT struct's, in order
+    "extract": lambda docs: [vars(d["extract"]) for d in docs],
+    "sigs": lambda docs: [
+        pure.scan_text(t, _COMPILED_SIGS) if (t := d["extract"].text) else []
+        for d in docs
+    ],
+    "simhash": _simhash_col,
+    "minhash": _minhash_col,
+    "quality": _key("quality"),
+    "detected_lang": _key("detected_lang"),
+    "n_tokens_ws": lambda docs: [d["token_count"][0] for d in docs],
+    "n_tokens_bpe": lambda docs: [d["token_count"][1] for d in docs],
+    # tag ranking (reference A1) is top-k of ONE doc's token counts — a
+    # per-row op, so it lives here, not behind a groupBy shuffle
+    "tags": lambda docs: [d["tags"][:10] for d in docs],
+    "slug": _key("slug"),
+}
+
+# every field, in S.ANALYSIS order
+FIELDS = tuple(n for n in S.ANALYSIS.names if n in _COLUMNS)
+
+
+def analyze_batch(html: pd.Series, fields: tuple[str, ...] = FIELDS) -> pd.DataFrame:
+    """One Arrow batch of raw page bytes -> the requested analysis columns.
 
     Delegates to pure.analyze_document — ONE decode + ONE DOM parse + ONE
     tokenization per page shared by all analyzers (field-for-field identical
     to the individual pure functions; the two-parse/four-tokenize version
-    measured ~40% slower)."""
-    out: dict[str, list] = {f: [] for f in _ANALYSIS_FIELDS}
-    # simhash is deferred and computed for the whole batch in one reduceat
-    # pass (pure._simhash_toks_batch) — bit-identical, ~4x cheaper than
-    # per-doc numpy setup
-    sim_toks: list[list] = []
-    mh_windows: list = []
-    for data in html:
-        b = bytes(data) if data is not None else b""
-        d = pure.analyze_document(
-            b, MINHASH_K, skip_simhash=True, skip_minhash=True
+    measured ~40% slower), running only the steps ``fields`` need."""
+    docs = [
+        pure.analyze_document(
+            bytes(data) if data is not None else b"",
+            MINHASH_K, skip_simhash=True, skip_minhash=True, fields=fields,
         )
-        sn = d["sniff"]
-        out["sniff"].append(
-            {
-                "content_type": sn["content_type"],
-                "charset": sn["charset"],
-                "embedded": [
-                    {"offset": off, "kind": kind} for off, kind in sn["embedded"]
-                ],
-                "interesting": sn["interesting"],
-            }
-        )
-        out["meta"].append(d["meta"])
-        ex = d["extract"]
-        out["extract"].append(
-            {
-                "text": ex.text,
-                "doc_type": ex.doc_type,
-                "status": ex.status,
-                "attempts": ex.attempts,
-                "title": ex.title,
-                "description": ex.description,
-            }
-        )
-        text = ex.text
-        out["sigs"].append(pure.scan_text(text, _COMPILED_SIGS) if text else [])
-        sim_toks.append(d["toks"] if text else [])
-        mh_windows.append(d["mh_windows"])
-        out["quality"].append(d["quality"])
-        out["detected_lang"].append(d["detected_lang"])
-        ws, bpe = d["token_count"]
-        out["n_tokens_ws"].append(ws)
-        out["n_tokens_bpe"].append(bpe)
-        # tag ranking (reference A1) is top-k of ONE doc's token counts —
-        # a per-row op, so it lives here, not behind a groupBy shuffle
-        out["tags"].append(d["tags"][:10])
-        out["slug"].append(d["slug"])
-    # minhash, like simhash, is computed for the whole batch in one
-    # reduceat pass (pure._minhash_windows_batch, round 7 — bit-identical,
-    # drops the per-doc (seeds, windows) broadcast setup); empty-text
-    # docs keep the per-doc form's [] signature
-    out["minhash"] = [
-        [] if sig is None else sig
-        for sig in pure._minhash_windows_batch(
-            mh_windows, MINHASH_K, signed=True
-        )
+        for data in html
     ]
-    out["simhash"] = [_to_i64(s) for s in pure._simhash_toks_batch(sim_toks)]
-    return pd.DataFrame(out)
+    return pd.DataFrame({f: _COLUMNS[f](docs) for f in fields})
 
 
-page_analysis = F.pandas_udf(analyze_batch, ANALYSIS_STRUCT)
+@functools.cache
+def _analysis_udf(fields: tuple[str, ...]):
+    def analyze_batch_udf(html: pd.Series) -> pd.DataFrame:
+        return analyze_batch(html, fields)
+
+    # the plan shows the UDF by this name; perfbench finds the analyzer's
+    # node by "analyze_batch", and a subset appends its fields
+    suffix = "" if fields == FIELDS else "_" + "_".join(fields)
+    analyze_batch_udf.__name__ = "analyze_batch" + suffix
+    return F.pandas_udf(
+        analyze_batch_udf, StructType([S.ANALYSIS[f] for f in fields])
+    )
 
 
-# Extract-only fused pass (round 9, guide §1.2 "don't compute things you
-# throw away"): the extract-shaped queries (extract_synth, pdf_extract)
-# consume ONLY extract.* (+ sniff.content_type) but previously ran the full
-# fused analyzer — signatures, tags, quality, language, token counts and the
-# whole analysis struct crossed Arrow just to be projected away (measured
-# 348 µs/doc full vs 64 µs/doc extract-only on the synth-page fixture).
-# Shares pure._extract_with_ctx with analyze_document, so the extract
-# semantics are one code path (pinned by tests/test_pure.py).
-EXTRACT_STRUCT = StructType(
-    [
-        S.ANALYSIS["extract"].dataType["text"],
-        S.ANALYSIS["extract"].dataType["doc_type"],
-        S.ANALYSIS["extract"].dataType["status"],
-        S.ANALYSIS["extract"].dataType["title"],
-        S.ANALYSIS["extract"].dataType["description"],
-        S.ANALYSIS["sniff"].dataType["content_type"],
-    ]
-)
-
-
-def extract_batch(html: pd.Series) -> pd.DataFrame:
-    cols: dict[str, list] = {
-        "text": [], "doc_type": [], "status": [], "title": [],
-        "description": [], "content_type": [],
-    }
-    for data in html:
-        b = bytes(data) if data is not None else b""
-        sn, ex, _ctx = pure._extract_with_ctx(b)
-        cols["text"].append(ex.text)
-        cols["doc_type"].append(ex.doc_type)
-        cols["status"].append(ex.status)
-        cols["title"].append(ex.title)
-        cols["description"].append(ex.description)
-        cols["content_type"].append(sn["content_type"])
-    return pd.DataFrame(cols)
-
-
-page_extract = F.pandas_udf(extract_batch, EXTRACT_STRUCT)
+def analysis_udf(fields=FIELDS):
+    """pandas UDF: page bytes -> struct of ``fields`` (in FIELDS order).
+    Memoized, so every caller asking for the same fields shares one UDF."""
+    unknown = set(fields) - set(FIELDS)
+    if unknown:
+        raise ValueError(f"unknown analysis fields: {sorted(unknown)}")
+    return _analysis_udf(tuple(f for f in FIELDS if f in fields))
 
 
 def _minhash_batch(text: pd.Series) -> pd.Series:
@@ -251,36 +227,28 @@ def content_pages(pages_df):
     return pages_df
 
 
-def with_analysis(pages_df):
-    """pages(url, warc_ts, html, ...) -> flat analysis DataFrame.
+def with_analysis(pages_df, fields=FIELDS):
+    """pages(url, warc_ts, html, ...) -> flat analysis DataFrame with the
+    S.ANALYSIS columns for ``fields`` plus the ones computed in the JVM.
 
     ``sha`` and ``html_bytes`` stay JVM-side (native sha2/length — no reason
     to pay the Arrow transfer for them); everything needing the decoded DOM
     rides the fused UDF. ``html`` is projected away immediately after the UDF
     stage (SURVEY.md §7.3 hard part 4 — never carry the blob further).
     """
+    jvm = {
+        "sha": F.sha2("html", 256),
+        # cast: length() is int, the declared schema (S.ANALYSIS) says
+        # bigint — found by the round-4 validate_analysis stage
+        "html_bytes": F.length("html").cast("long"),
+    }
+    cols = []
+    for name in S.ANALYSIS.names:
+        if name in jvm:
+            cols.append(jvm[name].alias(name))
+        elif name not in FIELDS:
+            cols.append(name)  # url, warc_ts, lang pass through
+        elif name in fields:
+            cols.append(F.col("a." + name).alias(name))
     pages_df = content_pages(pages_df)
-    return (
-        pages_df.withColumn("a", page_analysis("html"))
-        .select(
-            "url",
-            "warc_ts",
-            "lang",
-            F.col("a.sniff").alias("sniff"),
-            F.col("a.meta").alias("meta"),
-            F.col("a.extract").alias("extract"),
-            F.col("a.sigs").alias("sigs"),
-            F.sha2("html", 256).alias("sha"),
-            F.col("a.simhash").alias("simhash"),
-            F.col("a.minhash").alias("minhash"),
-            F.col("a.quality").alias("quality"),
-            F.col("a.detected_lang").alias("detected_lang"),
-            F.col("a.n_tokens_ws").alias("n_tokens_ws"),
-            F.col("a.n_tokens_bpe").alias("n_tokens_bpe"),
-            F.col("a.tags").alias("tags"),
-            F.col("a.slug").alias("slug"),
-            # cast: length() is int, the declared schema (S.ANALYSIS)
-            # says bigint — found by the round-4 validate_analysis stage
-            F.length("html").cast("long").alias("html_bytes"),
-        )
-    )
+    return pages_df.withColumn("a", analysis_udf(fields)("html")).select(*cols)

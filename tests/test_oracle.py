@@ -197,8 +197,28 @@ def test_lsh_topk_recall(spark):
 
 def test_entry_smoke(spark):
     import __spark_entry__ as e
+    from pyspark.sql import functions as F
+
+    from fa_spark.pipeline import JobConfig, analyze_pages
 
     df = e.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
     assert {"url", "ext_text", "doc_type", "status", "sha"} <= set(df.columns)
+    # entry computes only the fields it reads; its rows must equal the same
+    # ten columns projected from the all-fields analysis of the same pages
+    full = analyze_pages(e._entry_pages(spark), JobConfig(run_id="entry-smoke"))
+    expected = full.select(
+        "url",
+        F.col("extract.text").alias("ext_text"),
+        F.col("extract.doc_type").alias("doc_type"),
+        F.col("extract.status").alias("status"),
+        "sha",
+        "is_canonical",
+        "detected_lang",
+        "n_tokens_ws",
+        "tags",
+        "slug",
+    )
+    assert df.columns == expected.columns
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, expected.collect()))

@@ -339,19 +339,57 @@ def test_fused_equals_individual():
             assert d["simhash"] == 0 and d["minhash"] == []
 
 
-def test_extract_only_equals_fused():
-    """The round-9 extract-only pass (pure._extract_with_ctx, the kernel
-    behind stages.analyze.page_extract) must agree field-for-field with the
-    full fused analyzer on every fixture page — extract result AND sniff."""
-    from fa_spark.gen_fixtures import gen_pages
+_ANALYSIS_SUBSETS = {
+    "entry": ("extract", "detected_lang", "n_tokens_ws", "tags", "slug"),
+    "corpus": ("extract", "detected_lang", "quality", "minhash", "tags",
+               "n_tokens_ws", "n_tokens_bpe"),
+    "extract_synth": ("extract",),
+    "pdf_extract": ("sniff", "extract"),
+}
 
-    rows = gen_pages(300).to_pylist()
-    for r in rows:
-        b = r["html"]
-        d = pure.analyze_document(b)
-        sn, ex, _ctx = pure._extract_with_ctx(b)
-        assert sn == d["sniff"]
-        assert ex == d["extract"]
+
+@pytest.fixture(scope="module")
+def analyzed_fixture_pages():
+    """gen_pages(300) html with its all-fields document and batch results."""
+    import pandas as pd
+
+    from fa_spark.gen_fixtures import gen_pages
+    from fa_spark.stages.analyze import analyze_batch
+
+    html = [r["html"] for r in gen_pages(300).to_pylist()]
+    return html, [pure.analyze_document(b) for b in html], analyze_batch(pd.Series(html))
+
+
+def _subset_cases():
+    from fa_spark.stages.analyze import FIELDS
+
+    return [pytest.param((f,), id=f) for f in FIELDS] + [
+        pytest.param(fields, id=name) for name, fields in _ANALYSIS_SUBSETS.items()
+    ]
+
+
+@pytest.mark.parametrize("fields", _subset_cases())
+def test_field_subset_equals_full(fields, analyzed_fixture_pages):
+    """Asking for a subset of the analysis fields computes each of them
+    exactly as the all-fields pass does, per document (pure) and per
+    Arrow batch (stages.analyze, which adds the batch-wide minhash and
+    simhash columns). Sniff and extract always run and always agree."""
+    import pandas as pd
+
+    from fa_spark.stages.analyze import analyze_batch
+
+    html, full_docs, full_batch = analyzed_fixture_pages
+    doc_key = {"sigs": "extract", "n_tokens_ws": "token_count",
+               "n_tokens_bpe": "token_count"}
+    for b, full in zip(html, full_docs):
+        d = pure.analyze_document(b, fields=fields)
+        assert d["sniff"] == full["sniff"]
+        assert d["extract"] == full["extract"]
+        assert {doc_key.get(f, f) for f in fields} <= d.keys()
+        assert d == {k: full[k] for k in d}
+    batch = analyze_batch(pd.Series(html), fields)
+    assert list(batch.columns) == list(fields)
+    assert batch.to_dict("list") == full_batch[list(fields)].to_dict("list")
 
 
 def test_fixture_generator_deterministic():
