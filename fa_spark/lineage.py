@@ -89,25 +89,41 @@ def _tz_aware(t: dt.datetime) -> dt.datetime:
     return t if t.tzinfo is not None else t.replace(tzinfo=dt.timezone.utc)
 
 
+def _commit_times(base: str) -> dict[str, dt.datetime]:
+    """run_id -> commit time of every commit marker."""
+    p = _commits_path(base)
+    if not os.path.isdir(p):
+        return {}
+    out = {}
+    for f in os.listdir(p):
+        if not f.endswith(".json"):
+            continue
+        with open(os.path.join(p, f)) as fh:
+            doc = json.load(fh)
+        out[doc["run_id"]] = _tz_aware(dt.datetime.fromisoformat(doc["committed_at"]))
+    return out
+
+
 def list_committed_as_of(base: str, as_of: dt.datetime) -> set[str]:
     """TIME TRAVEL (round 3 — the Iceberg `AS OF TIMESTAMP` analogue on the
     parquet stand-in): run_ids whose commit marker was written at or before
     ``as_of``. Commit markers are the snapshot log, so a historical read is
     just a different committed-set filter — no data is rewritten, exactly
     like Iceberg snapshot isolation."""
-    p = _commits_path(base)
-    if not os.path.isdir(p):
-        return set()
     cutoff = _tz_aware(as_of)
-    out = set()
-    for f in os.listdir(p):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(p, f)) as fh:
-            doc = json.load(fh)
-        if _tz_aware(dt.datetime.fromisoformat(doc["committed_at"])) <= cutoff:
-            out.add(doc["run_id"])
-    return out
+    return {r for r, t in _commit_times(base).items() if t <= cutoff}
+
+
+def _committed_rows(
+    df: DataFrame, base: str, as_of: dt.datetime | None = None
+) -> DataFrame:
+    """``df``'s rows of committed runs (as of ``as_of`` when given). With
+    nothing committed it is ``limit(0)``, a relation the optimizer knows is
+    empty, so the joins over it are pruned."""
+    committed = sorted(
+        list_committed_as_of(base, as_of) if as_of else list_committed(base)
+    )
+    return df.where(F.col("run_id").isin(committed)) if committed else df.limit(0)
 
 
 _RUN_ID_RE = re.compile(r"^[A-Za-z0-9._\-]+$")
@@ -173,21 +189,16 @@ def read_processed(
     spark: SparkSession, base: str, as_of: dt.datetime | None = None
 ) -> DataFrame:
     """The committed processed set (uncommitted appends filtered out);
-    ``as_of`` reads the historical snapshot (list_committed_as_of). Only no
-    commits or a missing processed directory mean "nothing processed"; any
-    other read error propagates, since an empty set would re-analyze and
-    re-commit every page."""
+    ``as_of`` reads the historical snapshot (list_committed_as_of). Only a
+    missing processed directory or no commits mean "nothing processed"; any
+    read error propagates, since an empty set would re-analyze and re-commit
+    every page."""
     p = _processed_path(base)
-    committed = sorted(
-        list_committed_as_of(base, as_of) if as_of else list_committed(base)
-    )
-    if not committed or not os.path.isdir(p):
+    if not os.path.isdir(p):
         # limit(0), not a bare createDataFrame([]): the optimizer sees the
         # relation is empty and prunes the anti-join (and its shuffles)
         return spark.createDataFrame([], S.PROCESSED).limit(0)
-    return spark.read.schema(S.PROCESSED).parquet(p).where(
-        F.col("run_id").isin(committed)
-    )
+    return _committed_rows(spark.read.schema(S.PROCESSED).parquet(p), base, as_of)
 
 
 def filter_unprocessed(pages: DataFrame, processed: DataFrame) -> DataFrame:
@@ -229,11 +240,7 @@ def read_analysis(
             for f in inferred.fields
         ]
     )
-    df = spark.read.schema(pinned).parquet(path)
-    committed = sorted(
-        list_committed_as_of(base, as_of) if as_of else list_committed(base)
-    )
-    return df.where(F.col("run_id").isin(committed)) if committed else df.limit(0)
+    return _committed_rows(spark.read.schema(pinned).parquet(path), base, as_of)
 
 
 def commit_lineage(
@@ -359,8 +366,7 @@ def read_lineage(spark: SparkSession, base: str) -> DataFrame:
     # explicit schema: partition-column inference would type a numeric-
     # looking run_id dir name as INT and break the committed-set filter
     df = spark.read.schema(S.LINEAGE).parquet(_partitions_path(base))
-    committed = sorted(list_committed(base))
-    return df.where(F.col("run_id").isin(committed)) if committed else df.limit(0)
+    return _committed_rows(df, base)
 
 
 def expire_runs(
@@ -376,29 +382,12 @@ def expire_runs(
     Expired urls leave the processed set — re-submitting those pages
     re-processes them, the standard artifact-retention trade. Surviving
     runs keep exactly-once semantics (pytest: expire -> resume)."""
-    def _aware(t: dt.datetime) -> dt.datetime:
-        # normalize naive timestamps to UTC so mixed-tz markers / operator
-        # input never raise "can't compare offset-naive and offset-aware"
-        return t if t.tzinfo is not None else t.replace(tzinfo=dt.timezone.utc)
-
-    commits = []
-    cp = _commits_path(base)
-    if not os.path.isdir(cp):
-        return []
-    for f in os.listdir(cp):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(cp, f)) as fh:
-            doc = json.load(fh)
-        commits.append(
-            (_aware(dt.datetime.fromisoformat(doc["committed_at"])), doc["run_id"])
-        )
-    commits.sort()
+    commits = sorted((t, r) for r, t in _commit_times(base).items())
     expired: list[str] = []
     if keep_last_n is not None and len(commits) > keep_last_n:
         expired.extend(r for _, r in commits[: len(commits) - keep_last_n])
     if older_than is not None:
-        cutoff = _aware(older_than)
+        cutoff = _tz_aware(older_than)
         expired.extend(r for t, r in commits if t < cutoff)
     expired_set = set(expired)
     if not expired_set:
@@ -411,7 +400,7 @@ def expire_runs(
     _purge_run_dirs(_partitions_path(base), only=expired_set)
     for r in sorted(expired_set):  # markers last: crash mid-purge re-expires
         try:
-            os.remove(os.path.join(cp, f"{r}.json"))
+            os.remove(os.path.join(_commits_path(base), f"{r}.json"))
         except FileNotFoundError:
             pass
     return sorted(expired_set)

@@ -38,9 +38,11 @@ class JobConfig:
 def default_session(
     app: str = "fa-spark", cores: int | None = None, shuffle_partitions: int = 32
 ) -> SparkSession:
-    """Local session with the configs the 100-TB plan needs anyway:
-    AQE (skew joins / partition coalescing), Arrow batches sized for ~50-100 KB
-    html blobs (SURVEY.md §4.2 item 3)."""
+    """Local session with the configs the 100-TB plan needs anyway: Arrow
+    batches sized for ~50-100 KB html blobs (SURVEY.md §4.2 item 3). The plan
+    also relies on AQE skew-join splitting and runtime bloom-filter join
+    pruning (the lineage anti-join's probe side is the whole corpus), which
+    Spark enables by default."""
     master = f"local[{cores}]" if cores else "local[*]"
     return (
         SparkSession.builder.master(master)
@@ -48,15 +50,6 @@ def default_session(
         # container disk is slow+noisy; shuffle/spill to tmpfs in local mode
         .config("spark.local.dir", "/dev/shm/spark-local")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # runtime bloom-filter join pruning (Spark 3.3+): the probe side of
-        # a selective join (lineage anti-join, decontamination, near-dup
-        # joins back to the corpus) gets a bloom filter built from the
-        # build side, pruning rows BEFORE the shuffle — at 10^12 docs the
-        # anti-join's probe side is the whole corpus, so this is the
-        # difference between shuffling everything and shuffling survivors
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # joins (round 9, guide §3.1/§9): allow shuffled-hash join when a
         # side's per-partition build fits — skips the sort of the big side
         # (nation_revenue 1.9 -> 1.65 s at sf1.0). Size-based and

@@ -5895,10 +5895,6 @@ def flac_encode(samples: list[int], rate: int = 16000) -> bytes:
 
 
 _FLAC_BS_TABLE = {1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608}
-_FLAC_SR_TABLE = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
 _FLAC_BPS_TABLE = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
@@ -10050,9 +10046,6 @@ def font_encode(
 # count / peak bandwidth / summed segment duration.
 # ---------------------------------------------------------------------------
 
-_VTT_TS_RE = re.compile(
-    rb"(?:(\d+):)?(\d{2}):(\d{2})[.,](\d{3})"
-)
 _CUE_ARROW_RE = re.compile(
     rb"(?:(\d+):)?(\d{2}):(\d{2})[.,](\d{3})\s*-->\s*"
     rb"(?:(\d+):)?(\d{2}):(\d{2})[.,](\d{3})"
@@ -12674,7 +12667,6 @@ def detect_lang(text: str) -> str:
 
 _ALPHA_RE = re.compile(r"[^\W\d_]")
 _DIGIT_RE = re.compile(r"\d")
-_PUNCT_RE = re.compile(r"[.,;:!?\"'()\[\]{}]")
 
 
 def quality_score(text: str) -> dict:
@@ -12749,12 +12741,6 @@ def _quality_toks(text: str, toks: list[str]) -> dict:
         "stopword_ratio": (stop_hits / words) if words else 0.0,
         "mean_word_len": mean_wl,
     }
-
-
-def _shingles_toks(toks: list[str], k: int = 5) -> list[int]:
-    """shingles() on pre-computed tokens (identical output — both call the
-    shared vectorized _shingle_ids)."""
-    return _shingle_ids(toks, k)
 
 
 def _minhash_shingles(sh, num_hashes: int = 64) -> list[int]:

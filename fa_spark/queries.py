@@ -61,6 +61,50 @@ def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
     return df.repartition(par, key)
 
 
+def _doc_udf(return_type):
+    """Decorator: a scalar fixture ``fn(did: int)`` becomes the pandas UDF
+    that synthesizes ``fn(doc_id)`` for every row of an Arrow batch. The
+    UDF keeps ``fn``'s name (so plans show it) and docstring."""
+
+    def wrap(fn):
+        def batch(doc_id: pd.Series) -> pd.Series:
+            return pd.Series([fn(int(did)) for did in doc_id])
+
+        batch.__name__, batch.__doc__ = fn.__name__, fn.__doc__
+        return F.pandas_udf(batch, return_type)
+
+    return wrap
+
+
+def _media_features(spark, sf_dir, fixture_udf, *cols):
+    """The decode-query shape: spread ``documents``, synthesize one blob per
+    doc with ``fixture_udf``, decode it through the multimodal stage
+    (``mode="describe"``) and select ``doc_id`` then ``cols``. The scan reads
+    only ``doc_id``; ``cols`` may read ``media_id`` (the same id) and the
+    ``feature`` vector."""
+    from fa_spark.stages.multimodal import extract_media_features
+
+    media = _spread(_t(spark, sf_dir, "documents")).select(
+        F.col("doc_id").alias("media_id"),
+        fixture_udf("doc_id").alias("content"),
+    )
+    feats = extract_media_features(media, mode="describe")
+    return feats.select(F.col("media_id").cast("long").alias("doc_id"), *cols)
+
+
+# the decoded-PCM statistics every audio decode query reports, as
+# (column, feature index); stereo streams report n_channels in place
+# of sample_rate
+_PCM = (("rms", 1), ("peak", 2), ("zcr", 3), ("n_samples", 4),
+        ("sample_rate", 5), ("duration_s", 6))
+_STEREO_PCM = _PCM[:4] + (("n_channels", 7), ("duration_s", 6))
+
+
+def _feats(pairs) -> list:
+    """(column, feature index) pairs -> the rounded feature columns."""
+    return [_feat_d(i).alias(name) for name, i in pairs]
+
+
 # ---------------------------------------------------------------------------
 # relational harness (proves the oracle plumbing; SURVEY.md §2.4 note)
 # ---------------------------------------------------------------------------
@@ -2135,36 +2179,27 @@ IMG_SIDE = 16
 _GRAD_MOD = 251  # prime < 256: mean_r == doc_id % 251 exactly
 
 
-def _gradient_png_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def gradient_png_udf(did: int) -> bytes:
     """Deterministic 16x16 RGB PNG per doc: r = doc_id % 251 (solid),
     g = x*17, b = y*17 — every expected statistic is closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        rows = [
-            [(did % _GRAD_MOD, x * 17, y * 17) for x in range(IMG_SIDE)]
-            for y in range(IMG_SIDE)
-        ]
-        out.append(pure.png_encode(rows))
-    return pd.Series(out)
+    rows = [
+        [(did % _GRAD_MOD, x * 17, y * 17) for x in range(IMG_SIDE)]
+        for y in range(IMG_SIDE)
+    ]
+    return pure.png_encode(rows)
 
 
-def _step_png_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def step_png_udf(did: int) -> bytes:
     """Pattern-class PNG: vertical white/black step at column 2*(doc_id%8) —
     8 distinct aHash classes, constant within a class."""
-    out = []
-    for did in doc_id:
-        k = int(did) % 8
-        rows = [
-            [(255, 255, 255) if x < 2 * k else (0, 0, 0) for x in range(IMG_SIDE)]
-            for y in range(IMG_SIDE)
-        ]
-        out.append(pure.png_encode(rows))
-    return pd.Series(out)
-
-
-gradient_png_udf = F.pandas_udf(_gradient_png_batch, BinaryType())
-step_png_udf = F.pandas_udf(_step_png_batch, BinaryType())
+    k = did % 8
+    rows = [
+        [(255, 255, 255) if x < 2 * k else (0, 0, 0) for x in range(IMG_SIDE)]
+        for y in range(IMG_SIDE)
+    ]
+    return pure.png_encode(rows)
 
 
 def q_image_features(spark, sf_dir):
@@ -2172,16 +2207,8 @@ def q_image_features(spark, sf_dir):
     (pandas UDF -> pure.png_encode), push it through the multimodal decode
     stage (pure.decode_png: inflate + unfilter), and value-check the decoded
     statistics against their closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        gradient_png_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, gradient_png_udf,
         "width",
         "height",
         "decode_status",
@@ -2201,7 +2228,8 @@ FROM documents
 """
 
 
-def _vp8l_png_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def vp8l_gradient_udf(did: int) -> bytes:
     """Round 8 (VERDICT r7 #3): the SAME closed-form gradient as
     image_features, but VP8L-encoded with doc_id-rotated bitstream
     features — plain stream, subtract-green, color cache (1-8 bits),
@@ -2209,39 +2237,32 @@ def _vp8l_png_batch(doc_id: pd.Series) -> pd.Series:
     transform, the palette transform, and a two-group meta prefix image — so ONE oracle pins every
     decode path while the expected pixel statistics stay identical
     (the encode is lossless whatever the options)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        rows = [
-            [(did % _GRAD_MOD, x * 17, y * 17) for x in range(IMG_SIDE)]
-            for y in range(IMG_SIDE)
-        ]
-        k = did % 7
-        if k == 0:
-            blob = pure.webp_vp8l_encode(rows)
-        elif k == 1:
-            blob = pure.webp_vp8l_encode(rows, subtract_green=True)
-        elif k == 2:
-            blob = pure.webp_vp8l_encode(rows, cache_bits=1 + did % 8)
-        elif k == 3:
-            blob = pure.webp_vp8l_encode(
-                rows, predictor=did % 14, transform_bits=2 + did % 4
-            )
-        elif k == 4:
-            blob = pure.webp_vp8l_encode(
-                rows,
-                color=(did % 256, (did * 7) % 256, (did * 13) % 256),
-                transform_bits=3,
-            )
-        elif k == 5:
-            blob = pure.webp_vp8l_encode(rows, palette=True)
-        else:
-            blob = pure.webp_vp8l_encode(rows, meta_bits=2 + did % 4)
-        out.append(blob)
-    return pd.Series(out)
-
-
-vp8l_gradient_udf = F.pandas_udf(_vp8l_png_batch, BinaryType())
+    rows = [
+        [(did % _GRAD_MOD, x * 17, y * 17) for x in range(IMG_SIDE)]
+        for y in range(IMG_SIDE)
+    ]
+    k = did % 7
+    if k == 0:
+        blob = pure.webp_vp8l_encode(rows)
+    elif k == 1:
+        blob = pure.webp_vp8l_encode(rows, subtract_green=True)
+    elif k == 2:
+        blob = pure.webp_vp8l_encode(rows, cache_bits=1 + did % 8)
+    elif k == 3:
+        blob = pure.webp_vp8l_encode(
+            rows, predictor=did % 14, transform_bits=2 + did % 4
+        )
+    elif k == 4:
+        blob = pure.webp_vp8l_encode(
+            rows,
+            color=(did % 256, (did * 7) % 256, (did * 13) % 256),
+            transform_bits=3,
+        )
+    elif k == 5:
+        blob = pure.webp_vp8l_encode(rows, palette=True)
+    else:
+        blob = pure.webp_vp8l_encode(rows, meta_bits=2 + did % 4)
+    return blob
 
 
 def q_webp_lossless(spark, sf_dir):
@@ -2251,16 +2272,8 @@ def q_webp_lossless(spark, sf_dir):
     through the multimodal decode stage (pure.decode_webp_lossless), and
     value-check the decoded statistics against the same closed forms as
     image_features."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        vp8l_gradient_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, vp8l_gradient_udf,
         (F.col("media_id").cast("long") % 7).cast("int").alias("variant"),
         "width",
         "height",
@@ -2282,32 +2295,26 @@ FROM documents
 """
 
 
-def _ico_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def ico_udf(did: int) -> bytes:
     """Round 8: favicon fixtures — the image_features gradient packed
     as PNG-in-ICO, BMP-in-ICO (headerless double-height payload), or a
     three-image directory whose largest entry is the gradient (the
     decoder must elect it), rotating on doc_id."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        rows = [
-            [(did % _GRAD_MOD, x * 17, y * 17) for x in range(IMG_SIDE)]
-            for y in range(IMG_SIDE)
-        ]
-        k = did % 3
-        if k == 0:
-            out.append(pure.ico_encode([("png", rows)]))
-        elif k == 1:
-            out.append(pure.ico_encode([("bmp", rows)]))
-        else:
-            junk = [[(did % 256, 0, 255)] * 8 for _ in range(8)]
-            out.append(pure.ico_encode(
-                [("bmp", junk), ("png", rows), ("bmp", [[(1, 2, 3)] * 4] * 4)]
-            ))
-    return pd.Series(out)
-
-
-ico_udf = F.pandas_udf(_ico_batch, BinaryType())
+    rows = [
+        [(did % _GRAD_MOD, x * 17, y * 17) for x in range(IMG_SIDE)]
+        for y in range(IMG_SIDE)
+    ]
+    k = did % 3
+    if k == 0:
+        return pure.ico_encode([("png", rows)])
+    elif k == 1:
+        return pure.ico_encode([("bmp", rows)])
+    else:
+        junk = [[(did % 256, 0, 255)] * 8 for _ in range(8)]
+        return pure.ico_encode(
+            [("bmp", junk), ("png", rows), ("bmp", [[(1, 2, 3)] * 4] * 4)]
+        )
 
 
 def q_ico_features(spark, sf_dir):
@@ -2315,16 +2322,8 @@ def q_ico_features(spark, sf_dir):
     highest-frequency image container a crawl serves): PNG-in-ICO and
     BMP-in-ICO payloads through pure.decode_ico via the multimodal
     stage, value-checked against the image_features closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        ico_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, ico_udf,
         (F.col("media_id").cast("long") % 3).cast("int").alias("variant"),
         "content_type",
         "width",
@@ -2348,31 +2347,25 @@ FROM documents
 """
 
 
-def _svg_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def svg_udf(did: int) -> bytes:
     """Deterministic SVG per doc (round 8): closed-form element census
     and root dimensions; every fourth doc carries an inline script (the
     live-XSS surface svg:has_script flags)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        w, h = 100 + did % 50, 50 + did % 25
-        parts = [
-            '<?xml version="1.0"?>'
-            f'<svg xmlns="http://www.w3.org/2000/svg" width="{w}" '
-            f'height="{h}" viewBox="0 0 {w} {h}">'
-        ]
-        parts += [f'<rect x="{i}" width="4" height="4"/>'
-                  for i in range(1 + did % 5)]
-        parts += [f'<path d="M0 {i}L9 9"/>' for i in range(did % 3)]
-        parts += ["<text>t</text>"] * (did % 2)
-        if did % 4 == 0:
-            parts.append("<script>void(0)</script>")
-        parts.append("</svg>")
-        out.append("".join(parts).encode())
-    return pd.Series(out)
-
-
-svg_udf = F.pandas_udf(_svg_batch, BinaryType())
+    w, h = 100 + did % 50, 50 + did % 25
+    parts = [
+        '<?xml version="1.0"?>'
+        f'<svg xmlns="http://www.w3.org/2000/svg" width="{w}" '
+        f'height="{h}" viewBox="0 0 {w} {h}">'
+    ]
+    parts += [f'<rect x="{i}" width="4" height="4"/>'
+              for i in range(1 + did % 5)]
+    parts += [f'<path d="M0 {i}L9 9"/>' for i in range(did % 3)]
+    parts += ["<text>t</text>"] * (did % 2)
+    if did % 4 == 0:
+        parts.append("<script>void(0)</script>")
+    parts.append("</svg>")
+    return "".join(parts).encode()
 
 
 def q_svg_meta(spark, sf_dir):
@@ -2459,22 +2452,16 @@ _JQ = (
 _JQ_MASKS = (0x0F0F0F0F, 0xF0F0F0F0, 0x0F0F0F0F00000000, 0xF0F0F0F000000000)
 
 
-def _quadrant_jpeg_batch(doc_id: pd.Series) -> pd.Series:
-    out = []
-    for did in doc_id:
-        did = int(did)
-        v = [fn(did) for _sql, fn in _JQ]
-        rows = [
-            [v[0] if x < 8 else v[1] for x in range(16)]
-            if y < 8
-            else [v[2] if x < 8 else v[3] for x in range(16)]
-            for y in range(16)
-        ]
-        out.append(pure.jpeg_encode(rows, gray=True))
-    return pd.Series(out)
-
-
-quadrant_jpeg_udf = F.pandas_udf(_quadrant_jpeg_batch, BinaryType())
+@_doc_udf(BinaryType())
+def quadrant_jpeg_udf(did: int) -> bytes:
+    v = [fn(did) for _sql, fn in _JQ]
+    rows = [
+        [v[0] if x < 8 else v[1] for x in range(16)]
+        if y < 8
+        else [v[2] if x < 8 else v[3] for x in range(16)]
+        for y in range(16)
+    ]
+    return pure.jpeg_encode(rows, gray=True)
 
 
 def q_jpeg_features(spark, sf_dir):
@@ -2485,16 +2472,8 @@ def q_jpeg_features(spark, sf_dir):
     (pure.decode_jpeg: marker walk, Huffman decode, differential DC,
     integer IDCT), and value-check mean luminance, two histogram bins, and
     the 64-bit aHash against their closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        quadrant_jpeg_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, quadrant_jpeg_udf,
         "content_type",
         "decode_status",
         "width",
@@ -2506,25 +2485,19 @@ def q_jpeg_features(spark, sf_dir):
     )
 
 
-def _quadrant_progressive_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def quadrant_progressive_udf(did: int) -> bytes:
     """The quadrant fixture encoded as a PROGRESSIVE (SOF2) JPEG — the
     multi-scan successive-approximation layout ~10-20% of real crawled
     JPEGs use (round 4: previously decode_error)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        v = [fn(did) for _sql, fn in _JQ]
-        rows = [
-            [v[0] if x < 8 else v[1] for x in range(16)]
-            if y < 8
-            else [v[2] if x < 8 else v[3] for x in range(16)]
-            for y in range(16)
-        ]
-        out.append(pure.jpeg_encode_progressive(rows, gray=True))
-    return pd.Series(out)
-
-
-quadrant_progressive_udf = F.pandas_udf(_quadrant_progressive_batch, BinaryType())
+    v = [fn(did) for _sql, fn in _JQ]
+    rows = [
+        [v[0] if x < 8 else v[1] for x in range(16)]
+        if y < 8
+        else [v[2] if x < 8 else v[3] for x in range(16)]
+        for y in range(16)
+    ]
+    return pure.jpeg_encode_progressive(rows, gray=True)
 
 
 def q_progressive_jpeg(spark, sf_dir):
@@ -2535,16 +2508,8 @@ def q_progressive_jpeg(spark, sf_dir):
     produce IDENTICAL features — the oracle is literally jpeg_features'
     closed form, because a fully-refined progressive stream carries the
     same coefficients as the baseline coding."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        quadrant_progressive_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, quadrant_progressive_udf,
         "content_type",
         "decode_status",
         "width",
@@ -2624,27 +2589,21 @@ def q_detect_objects(spark, sf_dir):
     )
 
 
-def _quadrant_raster_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def quadrant_raster_udf(did: int) -> bytes:
     """Per-doc 16x16 four-quadrant gray image encoded as BMP / GIF / TIFF
     by doc_id % 3 — all three are LOSSLESS, so every decoded statistic is
     exactly the planted closed form (the jpeg_features pattern, minus the
     DC-quantization subtlety)."""
     encoders = (pure.bmp_encode, pure.gif_encode, pure.tiff_encode)
-    out = []
-    for did in doc_id:
-        did = int(did)
-        v = [fn(did) for _sql, fn in _JQ]
-        rows = [
-            [(v[0],) * 3 if x < 8 else (v[1],) * 3 for x in range(16)]
-            if y < 8
-            else [(v[2],) * 3 if x < 8 else (v[3],) * 3 for x in range(16)]
-            for y in range(16)
-        ]
-        out.append(encoders[did % 3](rows))
-    return pd.Series(out)
-
-
-quadrant_raster_udf = F.pandas_udf(_quadrant_raster_batch, BinaryType())
+    v = [fn(did) for _sql, fn in _JQ]
+    rows = [
+        [(v[0],) * 3 if x < 8 else (v[1],) * 3 for x in range(16)]
+        if y < 8
+        else [(v[2],) * 3 if x < 8 else (v[3],) * 3 for x in range(16)]
+        for y in range(16)
+    ]
+    return encoders[did % 3](rows)
 
 
 def q_raster_features(spark, sf_dir):
@@ -2654,16 +2613,8 @@ def q_raster_features(spark, sf_dir):
     stage decodes them (BI_RGB struct walk / LZW+palette / TIFF tag walk),
     and mean, histogram bins, and the 64-bit aHash check exactly against
     their closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        quadrant_raster_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, quadrant_raster_udf,
         "content_type",
         "decode_status",
         "width",
@@ -2714,26 +2665,18 @@ SQL_RASTER_FEATURES = _sql_raster_features()
 # ---------------------------------------------------------------------------
 
 
-def _warc_blob_batch(doc_id: pd.Series) -> pd.Series:
-    out = []
-    for did in doc_id:
-        did = int(did)
-        out.append(
-            pure.warc_encode(
-                [
-                    {
-                        "url": f"https://cc.example/{did}",
-                        "ts": f"2025-02-0{did % 9 + 1}T00:00:00Z",
-                        "payload": f"<p>warc doc {did}</p>".encode(),
-                    }
-                ],
-                gzip_members=(did % 2 == 0),
-            )
-        )
-    return pd.Series(out)
-
-
-warc_blob_udf = F.pandas_udf(_warc_blob_batch, BinaryType())
+@_doc_udf(BinaryType())
+def warc_blob_udf(did: int) -> bytes:
+    return pure.warc_encode(
+        [
+            {
+                "url": f"https://cc.example/{did}",
+                "ts": f"2025-02-0{did % 9 + 1}T00:00:00Z",
+                "payload": f"<p>warc doc {did}</p>".encode(),
+            }
+        ],
+        gzip_members=(did % 2 == 0),
+    )
 
 
 def q_warc_roundtrip(spark, sf_dir):
@@ -2785,7 +2728,8 @@ FROM documents
 """
 
 
-def _ocr_jpeg_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def ocr_jpeg_udf(did: int) -> bytes:
     """Per-doc text image 'doc<id>' rendered in the glyph font and encoded
     as a COLOR JPEG — the OCR query round-trips the LOSSY codec (ringing
     is absorbed by the ink threshold), not just PNG. Round 4 (VERDICT #6):
@@ -2800,25 +2744,18 @@ def _ocr_jpeg_batch(doc_id: pd.Series) -> pd.Series:
     pure.render_text_image_prop) — read back through the variable-pitch
     ink-gap matcher under the stage's pitch='auto' selection, covering
     both segmentation tiers in one oracle."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        ink, paper = (64, 224) if did % 2 == 0 else (0, 255)
-        scale = 1 + did % 3
-        render = (
-            pure.render_text_image_prop
-            if did % 5 in (2, 4)
-            else pure.render_text_image
-        )
-        rows = render(
-            f"doc{did}", scale=scale, ink=ink, paper=paper,
-            antialias=did % 4 == 1 and scale >= 2,
-        )
-        out.append(pure.jpeg_encode(rows))
-    return pd.Series(out)
-
-
-ocr_jpeg_udf = F.pandas_udf(_ocr_jpeg_batch, BinaryType())
+    ink, paper = (64, 224) if did % 2 == 0 else (0, 255)
+    scale = 1 + did % 3
+    render = (
+        pure.render_text_image_prop
+        if did % 5 in (2, 4)
+        else pure.render_text_image
+    )
+    rows = render(
+        f"doc{did}", scale=scale, ink=ink, paper=paper,
+        antialias=did % 4 == 1 and scale >= 2,
+    )
+    return pure.jpeg_encode(rows)
 
 
 def q_ocr_extract(spark, sf_dir):
@@ -2878,46 +2815,26 @@ WAV_RATE = 16000
 WAV_PERIOD = 8  # square wave: 4 samples up, 4 down -> 255 sign transitions
 
 
-def _square_wav_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def square_wav_udf(did: int) -> bytes:
     """Deterministic mono square wave per doc: amplitude
     1000 + (doc_id % 100) * 100 — every audio statistic is closed-form
     (|x| == A everywhere -> rms == peak == A; 255 zero crossings)."""
-    out = []
-    for did in doc_id:
-        a = 1000 + (int(did) % 100) * 100
-        samples = [
-            a if (i // (WAV_PERIOD // 2)) % 2 == 0 else -a for i in range(WAV_N)
-        ]
-        out.append(pure.wav_encode(samples, WAV_RATE))
-    return pd.Series(out)
-
-
-square_wav_udf = F.pandas_udf(_square_wav_batch, BinaryType())
+    a = 1000 + (did % 100) * 100
+    samples = [
+        a if (i // (WAV_PERIOD // 2)) % 2 == 0 else -a for i in range(WAV_N)
+    ]
+    return pure.wav_encode(samples, WAV_RATE)
 
 
 def q_audio_features(spark, sf_dir):
     """REAL audio decode round trip (round 2): synthesize a PCM WAV per
     document, decode it with pure.decode_wav (stdlib wave + integer math),
     value-check rms/peak/zero-crossing-rate/duration against closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        square_wav_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, square_wav_udf,
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -2934,21 +2851,16 @@ FROM documents
 """
 
 
-def _square_flac_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def square_flac_udf(did: int) -> bytes:
     """The audio_features square wave, FLAC-encoded (round 4 — VERDICT #5:
     compressed-audio envelope -> real decode). Lossless, so every decoded
     statistic is the SAME closed form the WAV path uses."""
-    out = []
-    for did in doc_id:
-        a = 1000 + (int(did) % 100) * 100
-        samples = [
-            a if (i // (WAV_PERIOD // 2)) % 2 == 0 else -a for i in range(WAV_N)
-        ]
-        out.append(pure.flac_encode(samples, WAV_RATE))
-    return pd.Series(out)
-
-
-square_flac_udf = F.pandas_udf(_square_flac_batch, BinaryType())
+    a = 1000 + (did % 100) * 100
+    samples = [
+        a if (i // (WAV_PERIOD // 2)) % 2 == 0 else -a for i in range(WAV_N)
+    ]
+    return pure.flac_encode(samples, WAV_RATE)
 
 
 def q_flac_features(spark, sf_dir):
@@ -2956,26 +2868,11 @@ def q_flac_features(spark, sf_dir):
     Rice-coded FLAC per document, decode it with pure.decode_flac (RFC
     9639 frame walk — subframe predictors, partitioned Rice residuals),
     value-check rms/peak/zcr/duration against the audio closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        square_flac_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, square_flac_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -2997,24 +2894,16 @@ OGG_HOPS = 8
 OGG_RATE = 8000
 
 
-def _vorbis_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def vorbis_tone_udf(did: int) -> bytes:
     """Single-bin Vorbis tone per doc (round 5): spectral bin 1+doc_id%5,
     dyadic amplitude (1+doc_id%7)/8 (stored exactly in the Vorbis float32
     codebook format), floor pinned flat at 1.0 — the decoded PCM is
     periodic with period 128 and every sample is a two-term cosine
     closed form (pure.vorbis_tone_encode docstring)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        out.append(
-            pure.vorbis_tone_encode(
-                1 + did % 5, (1 + did % 7) / 8.0, OGG_HOPS, OGG_RATE
-            )
-        )
-    return pd.Series(out)
-
-
-vorbis_tone_udf = F.pandas_udf(_vorbis_tone_batch, BinaryType())
+    return pure.vorbis_tone_encode(
+        1 + did % 5, (1 + did % 7) / 8.0, OGG_HOPS, OGG_RATE
+    )
 
 
 def q_ogg_features(spark, sf_dir):
@@ -3026,25 +2915,11 @@ def q_ogg_features(spark, sf_dir):
     value-check rms/peak/zcr/duration against an oracle that
     independently recomputes the periodic PCM from the IMDCT cosine
     closed form — the DSP math re-derived in SQL, not a row count."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        vorbis_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, vorbis_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3100,20 +2975,14 @@ FROM agg
 MP3_RATE = 32000
 
 
-def _mp3_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp3_tone_udf(did: int) -> bytes:
     """Single-line MPEG-1 Layer III stream per doc (round 6): spectral
     line doc_id%8 (subband 0, clear of the alias butterflies), dyadic
     amplitude 2^-(1+doc_id%4) carried exactly by global_gain, granule 0
     digital silence — the decoded 1152-sample PCM is a two-term
     cosine closed form (pure.mp3_tone_encode docstring)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        out.append(pure.mp3_tone_encode(did % 8, 1 + did % 4, MP3_RATE, 32))
-    return pd.Series(out)
-
-
-mp3_tone_udf = F.pandas_udf(_mp3_tone_batch, BinaryType())
+    return pure.mp3_tone_encode(did % 8, 1 + did % 4, MP3_RATE, 32)
 
 
 def q_mp3_features(spark, sf_dir):
@@ -3126,25 +2995,11 @@ def q_mp3_features(spark, sf_dir):
     against an oracle that independently recomputes the PCM from the
     IMDCT+synthesis cosine closed form — the DSP math re-derived in SQL,
     not a row count."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp3_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp3_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3221,20 +3076,15 @@ def _mp3_huff_params(did: int) -> tuple:
     )
 
 
-def _mp3_huff_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp3_huff_tone_udf(did: int) -> bytes:
     """Big-table + count1-A Layer III stream per doc (round 7 — VERDICT
     r6 #2): granule 1 carries one big-value pair coded with one of the
     small-value-family tables 2-9 AND one count1 TABLE-A quadruple, so
     the decode exercises every widened Huffman path; amplitudes stay
     closed-form (pure.mp3_huff_tone_encode docstring)."""
-    out = []
-    for did in doc_id:
-        tsel, x, y, sgn, q, e = _mp3_huff_params(int(did))
-        out.append(pure.mp3_huff_tone_encode(tsel, x, y, sgn, q, e, MP3_RATE, 64))
-    return pd.Series(out)
-
-
-mp3_huff_tone_udf = F.pandas_udf(_mp3_huff_tone_batch, BinaryType())
+    tsel, x, y, sgn, q, e = _mp3_huff_params(did)
+    return pure.mp3_huff_tone_encode(tsel, x, y, sgn, q, e, MP3_RATE, 64)
 
 
 def q_mp3_huff_features(spark, sf_dir):
@@ -3247,25 +3097,11 @@ def q_mp3_huff_features(spark, sf_dir):
     that recomputes the PCM as the LINEAR COMBINATION of per-line
     IMDCT+synthesis cosine closed forms — six spectral lines, six
     independent coefficients, re-derived in SQL."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp3_huff_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp3_huff_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3339,24 +3175,16 @@ FROM agg
 """
 
 
-def _mp3_short_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp3_short_tone_udf(did: int) -> bytes:
     """Pure-short (window-switching) Layer III frame per doc (round 7 —
     VERDICT r6 #3): granule 1 is block_type 2 with one +1 line at
     per-window index doc%6 of window (doc//6)%2, dyadic amplitude
     2^-(1+doc%4) — the 12-point IMDCT + overlap placement is the whole
     point; PCM stays single-term closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        out.append(
-            pure.mp3_short_tone_encode(
-                did % 6, (did // 6) % 2, 1 + did % 4, MP3_RATE, 64
-            )
-        )
-    return pd.Series(out)
-
-
-mp3_short_tone_udf = F.pandas_udf(_mp3_short_tone_batch, BinaryType())
+    return pure.mp3_short_tone_encode(
+        did % 6, (did // 6) % 2, 1 + did % 4, MP3_RATE, 64
+    )
 
 
 def q_mp3_short_features(spark, sf_dir):
@@ -3368,25 +3196,11 @@ def q_mp3_short_features(spark, sf_dir):
     overlapping at offsets 6/12/18 (pure._mp3_granule_pcm_short). The
     oracle recomputes the PCM from the short-window cosine closed form
     — the 12-point DSP re-derived in SQL, not a row count."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp3_short_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp3_short_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3445,31 +3259,21 @@ FROM agg
 """
 
 
-def _mp3_mixed_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp3_mixed_tone_udf(did: int) -> bytes:
     """Mixed-block Layer III frame per doc (round 7): doc%3 selects the
     plant — 0: LONG region line doc%8 (subband 0), 1/2: SHORT region
     band 3 offset doc%4 (subband 2) in window 0/1 — so both halves of
     the mixed hybrid filterbank and both overlap offsets are oracle-
     checked; dyadic amplitude 2^-(1+doc%4)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        kind = did % 3
-        e = 1 + did % 4
-        if kind == 0:
-            out.append(
-                pure.mp3_mixed_tone_encode(did % 8, None, 0, e, MP3_RATE, 64)
-            )
-        else:
-            out.append(
-                pure.mp3_mixed_tone_encode(
-                    None, did % 4, kind - 1, e, MP3_RATE, 64
-                )
-            )
-    return pd.Series(out)
-
-
-mp3_mixed_tone_udf = F.pandas_udf(_mp3_mixed_tone_batch, BinaryType())
+    kind = did % 3
+    e = 1 + did % 4
+    if kind == 0:
+        return pure.mp3_mixed_tone_encode(did % 8, None, 0, e, MP3_RATE, 64)
+    else:
+        return pure.mp3_mixed_tone_encode(
+            None, did % 4, kind - 1, e, MP3_RATE, 64
+        )
 
 
 def q_mp3_mixed_features(spark, sf_dir):
@@ -3483,25 +3287,11 @@ def q_mp3_mixed_features(spark, sf_dir):
     _mp3_granule_pcm_mixed). The oracle recomputes the PCM from the
     matching closed form: the long-window form for long plants, the
     12-point subband-2 form for short plants."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp3_mixed_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp3_mixed_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3564,25 +3354,17 @@ FROM agg
 """
 
 
-def _mp3_intensity_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp3_intensity_tone_udf(did: int) -> bytes:
     """Intensity-stereo Layer III frame per doc (round 7): the mono
     tone plant in the LEFT channel, intensity positions doc%7 in every
     band of the RIGHT channel's scalefactors (no right spectral data —
     every band is an intensity band). The engine's channel average is
     the mono closed form at half amplitude for ANY position, which is
     exactly why the independent-channel decode is bit-exact here."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        out.append(
-            pure.mp3_intensity_tone_encode(
-                did % 8, 1 + did % 4, did % 7, MP3_RATE, 48
-            )
-        )
-    return pd.Series(out)
-
-
-mp3_intensity_tone_udf = F.pandas_udf(_mp3_intensity_tone_batch, BinaryType())
+    return pure.mp3_intensity_tone_encode(
+        did % 8, 1 + did % 4, did % 7, MP3_RATE, 48
+    )
 
 
 def q_mp3_intensity_features(spark, sf_dir):
@@ -3594,25 +3376,11 @@ def q_mp3_intensity_features(spark, sf_dir):
     argument; M/S+intensity combined stays the one rejected joint
     mode). The fixture sweeps all seven legal intensity positions; the
     oracle is the mono IMDCT+synthesis closed form at half amplitude."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp3_intensity_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp3_intensity_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(7).alias("n_channels"),
-        fd(6).alias("duration_s"),
+        *_feats(_STEREO_PCM),
     )
 
 
@@ -3661,18 +3429,12 @@ FROM agg
 """
 
 
-def _mp3_ms_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp3_ms_tone_udf(did: int) -> bytes:
     """M/S joint-stereo Layer III frame per doc (round 6): the mono
     tone plant in the MID channel, side silent — both output channels
     decode to the mono PCM scaled by 1/sqrt(2)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        out.append(pure.mp3_ms_tone_encode(did % 8, 1 + did % 4, MP3_RATE, 48))
-    return pd.Series(out)
-
-
-mp3_ms_tone_udf = F.pandas_udf(_mp3_ms_tone_batch, BinaryType())
+    return pure.mp3_ms_tone_encode(did % 8, 1 + did % 4, MP3_RATE, 48)
 
 
 def q_mp3_ms_features(spark, sf_dir):
@@ -3681,25 +3443,11 @@ def q_mp3_ms_features(spark, sf_dir):
     the mid/side butterfly runs before the filterbank, so the planted
     mid-channel tone reaches both channels at 1/sqrt(2) amplitude; the
     oracle is the mono closed form with that exact factor."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp3_ms_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp3_ms_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(7).alias("n_channels"),
-        fd(6).alias("duration_s"),
+        *_feats(_STEREO_PCM),
     )
 
 
@@ -3750,7 +3498,8 @@ FROM agg
 MP2_RATE = 44100
 
 
-def _mp2_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp2_tone_udf(did: int) -> bytes:
     """Single-frame MPEG-1 Layer II stream per doc (round 6): subband
     doc_id%27 carries the grouped 3-level code (2,2,2) at scalefactor
     index 3*(1+doc_id%4) — sweeping the subband over all 27 table-A
@@ -3759,24 +3508,13 @@ def _mp2_tone_batch(doc_id: pd.Series) -> pd.Series:
     the table-A row — the per-channel bitrate selection goes live) with
     the right channel at scalefactor exponent 1+(doc//4)%4; channels
     average to the mono closed form at the mean dyadic gain."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        if did % 2:
-            out.append(
-                pure.mp2_tone_encode(
-                    did % 27, 1 + did % 4, MP2_RATE, 128,
-                    amp_exp_r=1 + (did // 4) % 4,
-                )
-            )
-        else:
-            out.append(
-                pure.mp2_tone_encode(did % 27, 1 + did % 4, MP2_RATE, 64)
-            )
-    return pd.Series(out)
-
-
-mp2_tone_udf = F.pandas_udf(_mp2_tone_batch, BinaryType())
+    if did % 2:
+        return pure.mp2_tone_encode(
+            did % 27, 1 + did % 4, MP2_RATE, 128,
+            amp_exp_r=1 + (did // 4) % 4,
+        )
+    else:
+        return pure.mp2_tone_encode(did % 27, 1 + did % 4, MP2_RATE, 64)
 
 
 def q_mp2_features(spark, sf_dir):
@@ -3789,25 +3527,11 @@ def q_mp2_features(spark, sf_dir):
     polyphase synthesis), and value-check rms/peak/zcr/duration against
     an oracle that independently recomputes the PCM from the synthesis
     cosine closed form."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp2_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp2_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3877,30 +3601,20 @@ FROM agg
 MP1_RATE = 32000
 
 
-def _mp1_tone_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp1_tone_udf(did: int) -> bytes:
     """Single-frame MPEG-1 Layer I stream per doc: subband doc_id%32,
     scalefactor index 3*(1+doc_id%4) — all 32 subbands swept. Round 7:
     odd docs are mode-00 STEREO with the right channel at exponent
     1+(doc//4)%4; channels average to the mono closed form at the mean
     dyadic gain."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        if did % 2:
-            out.append(
-                pure.mp1_tone_encode(
-                    did % 32, 1 + did % 4, MP1_RATE, 64,
-                    amp_exp_r=1 + (did // 4) % 4,
-                )
-            )
-        else:
-            out.append(
-                pure.mp1_tone_encode(did % 32, 1 + did % 4, MP1_RATE, 64)
-            )
-    return pd.Series(out)
-
-
-mp1_tone_udf = F.pandas_udf(_mp1_tone_batch, BinaryType())
+    if did % 2:
+        return pure.mp1_tone_encode(
+            did % 32, 1 + did % 4, MP1_RATE, 64,
+            amp_exp_r=1 + (did // 4) % 4,
+        )
+    else:
+        return pure.mp1_tone_encode(did % 32, 1 + did % 4, MP1_RATE, 64)
 
 
 def q_mp1_features(spark, sf_dir):
@@ -3911,25 +3625,11 @@ def q_mp1_features(spark, sf_dir):
     synthesis filterbank (pure.decode_mp1). Oracle recomputes the
     384-sample PCM from the synthesis cosine closed form, channel rows
     averaged exactly as the decoder does."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp1_tone_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mp1_tone_udf,
         "content_type",
         "decode_status",
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        *_feats(_PCM),
     )
 
 
@@ -3986,7 +3686,8 @@ FROM agg
 """
 
 
-def _wav_codec_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def wav_codec_udf(did: int) -> bytes:
     """Non-PCM WAV fixture per doc (round 6): doc_id%3 selects the codec
     — 0: IMA ADPCM (4 constant blocks, magnitude 500+doc_id%1000 with
     alternating sign; each block header plants the predictor and the
@@ -3994,23 +3695,14 @@ def _wav_codec_batch(doc_id: pd.Series) -> pd.Series:
     (64 bytes of the constant code doc_id%256), 2: G.711 A-law (64 bytes
     of (doc_id*7+3)%256). All decode losslessly, so every feature is a
     closed form of doc_id."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        k = did % 3
-        if k == 0:
-            amp = 500 + did % 1000
-            out.append(pure.wav_adpcm_encode([amp, -amp, amp, -amp]))
-        elif k == 1:
-            out.append(pure.wav_g711_encode(bytes([did % 256]) * 64, "mulaw"))
-        else:
-            out.append(
-                pure.wav_g711_encode(bytes([(did * 7 + 3) % 256]) * 64, "alaw")
-            )
-    return pd.Series(out)
-
-
-wav_codec_udf = F.pandas_udf(_wav_codec_batch, BinaryType())
+    k = did % 3
+    if k == 0:
+        amp = 500 + did % 1000
+        return pure.wav_adpcm_encode([amp, -amp, amp, -amp])
+    elif k == 1:
+        return pure.wav_g711_encode(bytes([did % 256]) * 64, "mulaw")
+    else:
+        return pure.wav_g711_encode(bytes([(did * 7 + 3) % 256]) * 64, "alaw")
 
 
 def q_wav_codec_features(spark, sf_dir):
@@ -4020,26 +3712,12 @@ def q_wav_codec_features(spark, sf_dir):
     IMA step machine, the ITU expansion tables), value-checking
     rms/peak/zcr/duration AND the dispatched codec id against closed
     forms (the G.711 expansions re-derived arithmetically in SQL)."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        wav_codec_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, wav_codec_udf,
         "content_type",
         "decode_status",
-        fd(8).alias("codec_id"),
-        fd(1).alias("rms"),
-        fd(2).alias("peak"),
-        fd(3).alias("zcr"),
-        fd(4).alias("n_samples"),
-        fd(5).alias("sample_rate"),
-        fd(6).alias("duration_s"),
+        _feat_d(8).alias("codec_id"),
+        *_feats(_PCM),
     )
 
 
@@ -4113,23 +3791,19 @@ def _jsonld_parse_batch(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def _jsonld_page_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(StringType())
+def jsonld_page_udf(did: int) -> str:
     """Synthetic page with 1+doc_id%3 JSON-LD blocks; block i carries
     @type _JSONLD_TYPES[(doc_id+i)%3] and name 'item <doc_id>-<i>'."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        blocks = "".join(
-            '<script type="application/ld+json">'
-            f'{{"@type": "{_JSONLD_TYPES[(did + i) % 3]}", '
-            f'"name": "item {did}-{i}"}}</script>'
-            for i in range(1 + did % 3)
-        )
-        out.append(f"<html><head><title>t{did}</title>{blocks}</head></html>")
-    return pd.Series(out)
+    blocks = "".join(
+        '<script type="application/ld+json">'
+        f'{{"@type": "{_JSONLD_TYPES[(did + i) % 3]}", '
+        f'"name": "item {did}-{i}"}}</script>'
+        for i in range(1 + did % 3)
+    )
+    return f"<html><head><title>t{did}</title>{blocks}</head></html>"
 
 
-jsonld_page_udf = F.pandas_udf(_jsonld_page_batch, StringType())
 jsonld_parse_udf = F.pandas_udf(_jsonld_parse_batch, _jsonld_schema)
 
 
@@ -4173,35 +3847,32 @@ _page_meta_schema = StructType(
 )
 
 
-def _page_meta_fixture_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(StringType())
+def page_meta_fixture_udf(did: int) -> str:
     """Head-metadata page per doc: entity-bearing title, canonical link
     present for doc_id%3 != 0, og tags in both attribute orders and
     quote styles, a duplicate og:type that first-wins must ignore, an
     empty-content meta and a bare-value charset meta that must both be
     skipped, keywords present for odd docs."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        canon = (
-            f'<link rel="canonical" href="https://ex.com/c/{did % 7}">'
-            if did % 3
-            else '<link rel="alternate" href="/feed.xml">'
-        )
-        kw = f'<meta name="keywords" content="k{did}">' if did % 2 else ""
-        out.append(
-            "<html><head>"
-            f"<title>Page &amp; {did}</title>"
-            f"{canon}"
-            f'<meta property="og:type" content="{_PAGE_META_TYPES[did % 4]}">'
-            f"<meta content='t {did}' property=\"og:title\">"
-            f'<meta name="description" content="d{did}">'
-            f"{kw}"
-            '<meta name="empty" content="">'
-            "<meta charset=utf-8>"
-            '<meta property="og:type" content="WRONG-DUP">'
-            "</head><body>body</body></html>"
-        )
-    return pd.Series(out)
+    canon = (
+        f'<link rel="canonical" href="https://ex.com/c/{did % 7}">'
+        if did % 3
+        else '<link rel="alternate" href="/feed.xml">'
+    )
+    kw = f'<meta name="keywords" content="k{did}">' if did % 2 else ""
+    return (
+        "<html><head>"
+        f"<title>Page &amp; {did}</title>"
+        f"{canon}"
+        f'<meta property="og:type" content="{_PAGE_META_TYPES[did % 4]}">'
+        f"<meta content='t {did}' property=\"og:title\">"
+        f'<meta name="description" content="d{did}">'
+        f"{kw}"
+        '<meta name="empty" content="">'
+        "<meta charset=utf-8>"
+        '<meta property="og:type" content="WRONG-DUP">'
+        "</head><body>body</body></html>"
+    )
 
 
 def _page_meta_parse_batch(html: pd.Series) -> pd.DataFrame:
@@ -4221,7 +3892,6 @@ def _page_meta_parse_batch(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-page_meta_fixture_udf = F.pandas_udf(_page_meta_fixture_batch, StringType())
 page_meta_parse_udf = F.pandas_udf(_page_meta_parse_batch, _page_meta_schema)
 
 
@@ -4371,39 +4041,35 @@ def _feed_parse_batch(xml: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def _feed_fixture_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(StringType())
+def feed_fixture_udf(did: int) -> str:
     """RSS for even docs, Atom for odd; 1+doc_id%5 items titled
     'post <doc_id>-<i>'."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 1 + did % 5
-        if did % 2 == 0:
-            items = "".join(
-                f"<item><title>post {did}-{i}</title>"
-                f"<link>https://ex.com/{did}/{i}</link>"
-                f"<pubDate>Thu, 0{1 + i} Jan 2026</pubDate></item>"
-                for i in range(n)
-            )
-            out.append(
-                f"<rss><channel><title>feed {did}</title>{items}"
-                "</channel></rss>"
-            )
-        else:
-            entries = "".join(
-                f"<entry><title>post {did}-{i}</title>"
-                f'<link href="https://ex.com/{did}/{i}"/>'
-                f"<updated>2026-01-0{1 + i}</updated></entry>"
-                for i in range(n)
-            )
-            out.append(
-                '<feed xmlns="http://www.w3.org/2005/Atom">'
-                f"<title>feed {did}</title>{entries}</feed>"
-            )
-    return pd.Series(out)
+    n = 1 + did % 5
+    if did % 2 == 0:
+        items = "".join(
+            f"<item><title>post {did}-{i}</title>"
+            f"<link>https://ex.com/{did}/{i}</link>"
+            f"<pubDate>Thu, 0{1 + i} Jan 2026</pubDate></item>"
+            for i in range(n)
+        )
+        return (
+            f"<rss><channel><title>feed {did}</title>{items}"
+            "</channel></rss>"
+        )
+    else:
+        entries = "".join(
+            f"<entry><title>post {did}-{i}</title>"
+            f'<link href="https://ex.com/{did}/{i}"/>'
+            f"<updated>2026-01-0{1 + i}</updated></entry>"
+            for i in range(n)
+        )
+        return (
+            '<feed xmlns="http://www.w3.org/2005/Atom">'
+            f"<title>feed {did}</title>{entries}</feed>"
+        )
 
 
-feed_fixture_udf = F.pandas_udf(_feed_fixture_batch, StringType())
 feed_parse_udf = F.pandas_udf(_feed_parse_batch, _feed_schema)
 
 
@@ -4460,26 +4126,22 @@ def _sitemap_parse_batch(xml: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def _sitemap_fixture_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(StringType())
+def sitemap_fixture_udf(did: int) -> str:
     """urlset with 1+doc_id%6 urls; lastmod day i+1 so the max is the
     url count."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 1 + did % 6
-        urls = "".join(
-            f"<url><loc>https://ex.com/{did}/{i}</loc>"
-            f"<lastmod>2026-01-0{1 + i}</lastmod></url>"
-            for i in range(n)
-        )
-        out.append(
-            '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-            f"{urls}</urlset>"
-        )
-    return pd.Series(out)
+    n = 1 + did % 6
+    urls = "".join(
+        f"<url><loc>https://ex.com/{did}/{i}</loc>"
+        f"<lastmod>2026-01-0{1 + i}</lastmod></url>"
+        for i in range(n)
+    )
+    return (
+        '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+        f"{urls}</urlset>"
+    )
 
 
-sitemap_fixture_udf = F.pandas_udf(_sitemap_fixture_batch, StringType())
 sitemap_parse_udf = F.pandas_udf(_sitemap_parse_batch, _sitemap_schema)
 
 
@@ -4611,21 +4273,15 @@ VID_SIDE = 16
 VID_FPS = 25
 
 
-def _const_frames_y4m_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def const_frames_y4m_udf(did: int) -> bytes:
     """Deterministic Y4M clip per doc: 4 + doc_id%5 frames of constant
     luminance 10*(doc_id%20) + frame_index — frame count, duration, and
     every sampled-frame mean are closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 4 + did % 5
-        base = 10 * (did % 20)
-        frames = [bytes([base + k]) * (VID_SIDE * VID_SIDE) for k in range(n)]
-        out.append(pure.y4m_encode(frames, VID_SIDE, VID_SIDE, VID_FPS))
-    return pd.Series(out)
-
-
-const_frames_y4m_udf = F.pandas_udf(_const_frames_y4m_batch, BinaryType())
+    n = 4 + did % 5
+    base = 10 * (did % 20)
+    frames = [bytes([base + k]) * (VID_SIDE * VID_SIDE) for k in range(n)]
+    return pure.y4m_encode(frames, VID_SIDE, VID_SIDE, VID_FPS)
 
 
 def q_video_features(spark, sf_dir):
@@ -4633,24 +4289,14 @@ def q_video_features(spark, sf_dir):
     document, decode it with pure.decode_y4m (header parse + frame
     iteration + even frame-sampling), value-check frame count, duration,
     and first/last sampled-frame luminance against closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        const_frames_y4m_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, const_frames_y4m_udf,
         "decode_status",
         "width",
         "height",
-        fd(1).alias("n_frames"),
-        fd(5).alias("duration_s"),
-        fd(7).alias("mean_first"),  # sampled frame 0
+        _feat_d(1).alias("n_frames"),
+        _feat_d(5).alias("duration_s"),
+        _feat_d(7).alias("mean_first"),
     )
 
 
@@ -4665,25 +4311,37 @@ FROM documents
 """
 
 
-def _mjpeg_avi_batch(doc_id: pd.Series) -> pd.Series:
+def _clip_cols() -> list:
+    """The columns the clip decode queries (mjpeg, mp4, mpeg1) report. The
+    sampled-frame means occupy feature slots 7.. (1-based); with n <= 7
+    frames every frame is sampled, so the LAST mean sits at slot
+    6 + n_sampled where n_sampled = feature[6]."""
+    last_slot = (F.element_at(F.col("feature"), 6) + F.lit(6.0)).cast("int")
+    return [
+        "content_type",
+        "decode_status",
+        "width",
+        "height",
+        *_feats((("n_frames", 1), ("duration_s", 5), ("mean_first", 7))),
+        F.round(
+            F.element_at(F.col("feature"), last_slot).cast("double"), 6
+        ).alias("mean_last"),
+    ]
+
+
+@_doc_udf(BinaryType())
+def mjpeg_avi_udf(did: int) -> bytes:
     """Deterministic Motion-JPEG AVI per doc: 3 + doc_id%4 solid-gray
     16x16 JPEG frames at luminance 20 + 9*(doc_id%20) + frame_index —
     solid frames DC-round-trip exactly through the JPEG codec, so every
     sampled-frame mean is closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 3 + did % 4
-        base = 20 + 9 * (did % 20)
-        frames = [
-            pure.jpeg_encode([[(base + k,) * 3] * VID_SIDE] * VID_SIDE)
-            for k in range(n)
-        ]
-        out.append(pure.avi_mjpeg_encode(frames, VID_FPS, VID_SIDE, VID_SIDE))
-    return pd.Series(out)
-
-
-mjpeg_avi_udf = F.pandas_udf(_mjpeg_avi_batch, BinaryType())
+    n = 3 + did % 4
+    base = 20 + 9 * (did % 20)
+    frames = [
+        pure.jpeg_encode([[(base + k,) * 3] * VID_SIDE] * VID_SIDE)
+        for k in range(n)
+    ]
+    return pure.avi_mjpeg_encode(frames, VID_FPS, VID_SIDE, VID_SIDE)
 
 
 def q_mjpeg_features(spark, sf_dir):
@@ -4692,32 +4350,7 @@ def q_mjpeg_features(spark, sf_dir):
     movi walk -> per-frame JPEG decode with this repo's own codec ->
     even frame sampling): value-check frame count, geometry, duration,
     and first/last sampled-frame luminance against closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mjpeg_avi_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    # the sampled-frame means occupy feature slots 7.. (1-based); with
-    # n <= 7 frames every frame is sampled, so the LAST mean sits at
-    # slot 6 + n_sampled where n_sampled = feature[6]
-    last_slot = (F.element_at(F.col("feature"), 6) + F.lit(6.0)).cast("int")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        "content_type",
-        "decode_status",
-        "width",
-        "height",
-        fd(1).alias("n_frames"),
-        fd(5).alias("duration_s"),
-        fd(7).alias("mean_first"),
-        F.round(
-            F.element_at(F.col("feature"), last_slot).cast("double"), 6
-        ).alias("mean_last"),
-    )
+    return _media_features(spark, sf_dir, mjpeg_avi_udf, *_clip_cols())
 
 
 SQL_MJPEG_FEATURES = f"""
@@ -4733,24 +4366,18 @@ FROM documents
 """
 
 
-def _mp4_mjpeg_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mp4_mjpeg_udf(did: int) -> bytes:
     """MJPEG-in-MP4 fixture: 2 + doc_id%5 solid-gray frames at luminance
     30 + 7*(doc_id%25) + frame_index, full sample-table machinery
     (stsd/stts/stsc/stsz/stco) resolved by the decoder."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 2 + did % 5
-        base = 30 + 7 * (did % 25)
-        frames = [
-            pure.jpeg_encode([[(base + k,) * 3] * VID_SIDE] * VID_SIDE)
-            for k in range(n)
-        ]
-        out.append(pure.mp4_mjpeg_encode(frames, VID_FPS, VID_SIDE, VID_SIDE))
-    return pd.Series(out)
-
-
-mp4_mjpeg_udf = F.pandas_udf(_mp4_mjpeg_batch, BinaryType())
+    n = 2 + did % 5
+    base = 30 + 7 * (did % 25)
+    frames = [
+        pure.jpeg_encode([[(base + k,) * 3] * VID_SIDE] * VID_SIDE)
+        for k in range(n)
+    ]
+    return pure.mp4_mjpeg_encode(frames, VID_FPS, VID_SIDE, VID_SIDE)
 
 
 def q_mp4_frames(spark, sf_dir):
@@ -4758,29 +4385,7 @@ def q_mp4_frames(spark, sf_dir):
     path: ISO BMFF sample tables resolved to absolute byte ranges, each
     sampled frame decoded as a complete JPEG): value-check frame count,
     geometry, duration, and first/last sampled-frame luminance."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mp4_mjpeg_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    last_slot = (F.element_at(F.col("feature"), 6) + F.lit(6.0)).cast("int")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        "content_type",
-        "decode_status",
-        "width",
-        "height",
-        fd(1).alias("n_frames"),
-        fd(5).alias("duration_s"),
-        fd(7).alias("mean_first"),
-        F.round(
-            F.element_at(F.col("feature"), last_slot).cast("double"), 6
-        ).alias("mean_last"),
-    )
+    return _media_features(spark, sf_dir, mp4_mjpeg_udf, *_clip_cols())
 
 
 SQL_MP4_FRAMES = f"""
@@ -4796,23 +4401,17 @@ FROM documents
 """
 
 
-def _gif_anim_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def gif_anim_udf(did: int) -> bytes:
     """Animated-GIF fixture: 2 + doc_id%6 full-screen solid frames at
     luminance 15 + 11*(doc_id%20) + k, 4 cs per frame (25 fps)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 2 + did % 6
-        base = 15 + 11 * (did % 20)
-        frames = [
-            [[(base + k,) * 3] * VID_SIDE for _ in range(VID_SIDE)]
-            for k in range(n)
-        ]
-        out.append(pure.gif_animate_encode(frames, delays_cs=[4] * n))
-    return pd.Series(out)
-
-
-gif_anim_udf = F.pandas_udf(_gif_anim_batch, BinaryType())
+    n = 2 + did % 6
+    base = 15 + 11 * (did % 20)
+    frames = [
+        [[(base + k,) * 3] * VID_SIDE for _ in range(VID_SIDE)]
+        for k in range(n)
+    ]
+    return pure.gif_animate_encode(frames, delays_cs=[4] * n)
 
 
 def q_gif_frames(spark, sf_dir):
@@ -4874,35 +4473,29 @@ FROM documents
 """
 
 
-def _asset_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def asset_udf(did: int) -> bytes:
     """Round 8: non-media web assets a crawl serves at volume — fonts
     (sfnt tables, WOFF1 zlib wrap), wasm modules (LEB section walk),
     ustar archives (checksummed member walk) — rotating on doc_id with
     every surfaced field closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        k = did % 3
-        if k == 0:
-            out.append(pure.font_encode(
-                f"Font {did}", "Regular", n_glyphs=1 + did % 500,
-                units_per_em=1000,
-                container=("ttf", "otf", "woff")[(did // 3) % 3],
-            ))
-        elif k == 1:
-            out.append(pure.wasm_encode(
-                n_functions=1 + did % 40, n_exports=1 + did % 10,
-                n_imports=did % 4, has_start=did % 2 == 1,
-            ))
-        else:
-            m = 1 + did % 6
-            out.append(pure.tar_encode(
-                [(f"f{i}.dat", did % 100 + i) for i in range(m)]
-            ))
-    return pd.Series(out)
-
-
-asset_udf = F.pandas_udf(_asset_batch, BinaryType())
+    k = did % 3
+    if k == 0:
+        return pure.font_encode(
+            f"Font {did}", "Regular", n_glyphs=1 + did % 500,
+            units_per_em=1000,
+            container=("ttf", "otf", "woff")[(did // 3) % 3],
+        )
+    elif k == 1:
+        return pure.wasm_encode(
+            n_functions=1 + did % 40, n_exports=1 + did % 10,
+            n_imports=did % 4, has_start=did % 2 == 1,
+        )
+    else:
+        m = 1 + did % 6
+        return pure.tar_encode(
+            [(f"f{i}.dat", did % 100 + i) for i in range(m)]
+        )
 
 
 def q_asset_meta(spark, sf_dir):
@@ -4973,39 +4566,33 @@ FROM d
 """
 
 
-def _office_doc_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def office_doc_udf(did: int) -> bytes:
     """Round 8: crawled office/book documents — OOXML docx (real
     WordprocessingML bodies) and EPUB (XHTML chapters through the
     flagship DOM extractor), rotating on doc_id with fully closed-form
     paragraph text."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        if did % 2 == 0:
-            n = 2 + did % 4
-            out.append(pure.docx_encode(
+    if did % 2 == 0:
+        n = 2 + did % 4
+        return pure.docx_encode(
+            [
+                f"Paragraph {i} of document {did} has exactly ten "
+                "words total." for i in range(n)
+            ],
+            title=f"Doc {did}",
+        )
+    else:
+        c = 1 + did % 3
+        return pure.epub_encode(
+            [
                 [
-                    f"Paragraph {i} of document {did} has exactly ten "
-                    "words total." for i in range(n)
-                ],
-                title=f"Doc {did}",
-            ))
-        else:
-            c = 1 + did % 3
-            out.append(pure.epub_encode(
-                [
-                    [
-                        f"Chapter {ch} paragraph {p} of document {did} "
-                        "holds ten words." for p in range(2)
-                    ]
-                    for ch in range(c)
-                ],
-                title=f"Book {did}",
-            ))
-    return pd.Series(out)
-
-
-office_doc_udf = F.pandas_udf(_office_doc_batch, BinaryType())
+                    f"Chapter {ch} paragraph {p} of document {did} "
+                    "holds ten words." for p in range(2)
+                ]
+                for ch in range(c)
+            ],
+            title=f"Book {did}",
+        )
 
 
 def q_docx_extract(spark, sf_dir):
@@ -5070,31 +4657,25 @@ FROM d
 """
 
 
-def _gif_composite_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def gif_composite_udf(did: int) -> bytes:
     """GIF89a compositing fixture (round 8): full 8x6 base at gray v0 =
     10 + doc_id%180, a 4x3 patch at (2, 2) at v1 = (v0+40)%256 whose
     disposal alternates between restore-previous (odd docs) and
     restore-background (even docs), then an 8x1 bottom strip at
     v2 = (v0+90)%256 — all three canvas means are closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        v0 = 10 + did % 180
-        v1 = (v0 + 40) % 256
-        v2 = (v0 + 90) % 256
-        base = [[(v0,) * 3] * 8 for _ in range(6)]
-        patch = [[(v1,) * 3] * 4 for _ in range(3)]
-        strip = [[(v2,) * 3] * 8]
-        disposal = 3 if did % 2 else 2
-        out.append(pure.gif_composite_encode(8, 6, [
-            (base, 0, 0, 5, 0, None),
-            (patch, 2, 2, 5, disposal, None),
-            (strip, 0, 5, 5, 0, None),
-        ]))
-    return pd.Series(out)
-
-
-gif_composite_udf = F.pandas_udf(_gif_composite_batch, BinaryType())
+    v0 = 10 + did % 180
+    v1 = (v0 + 40) % 256
+    v2 = (v0 + 90) % 256
+    base = [[(v0,) * 3] * 8 for _ in range(6)]
+    patch = [[(v1,) * 3] * 4 for _ in range(3)]
+    strip = [[(v2,) * 3] * 8]
+    disposal = 3 if did % 2 else 2
+    return pure.gif_composite_encode(8, 6, [
+        (base, 0, 0, 5, 0, None),
+        (patch, 2, 2, 5, disposal, None),
+        (strip, 0, 5, 5, 0, None),
+    ])
 
 
 def q_gif_composite(spark, sf_dir):
@@ -5158,40 +4739,34 @@ FROM d
 """
 
 
-def _caption_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def caption_udf(did: int) -> bytes:
     """Round 8: captions (WebVTT/SRT cue walks) and HLS playlists
     (master variant walk / media segment walk), rotating on doc_id,
     every surfaced field closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        k = did % 4
-        if k == 0:
-            n = 1 + did % 5
-            out.append(pure.vtt_encode(
-                [(i * 2000, i * 2000 + 1500, f"cue {i}") for i in range(n)]
-            ))
-        elif k == 1:
-            n = 1 + did % 4
-            out.append(pure.vtt_encode(
-                [(i * 1000, i * 1000 + 800, f"line {i}") for i in range(n)],
-                fmt="srt",
-            ))
-        elif k == 2:
-            v = 1 + did % 4
-            step = 100000 * (1 + did % 3)
-            out.append(pure.m3u8_encode(
-                variants=[(step * (i + 1), f"v{i}.m3u8") for i in range(v)]
-            ))
-        else:
-            n = 1 + did % 6
-            out.append(pure.m3u8_encode(
-                segments=[4.0 + 0.5 * (did % 2)] * n
-            ))
-    return pd.Series(out)
-
-
-caption_udf = F.pandas_udf(_caption_batch, BinaryType())
+    k = did % 4
+    if k == 0:
+        n = 1 + did % 5
+        return pure.vtt_encode(
+            [(i * 2000, i * 2000 + 1500, f"cue {i}") for i in range(n)]
+        )
+    elif k == 1:
+        n = 1 + did % 4
+        return pure.vtt_encode(
+            [(i * 1000, i * 1000 + 800, f"line {i}") for i in range(n)],
+            fmt="srt",
+        )
+    elif k == 2:
+        v = 1 + did % 4
+        step = 100000 * (1 + did % 3)
+        return pure.m3u8_encode(
+            variants=[(step * (i + 1), f"v{i}.m3u8") for i in range(v)]
+        )
+    else:
+        n = 1 + did % 6
+        return pure.m3u8_encode(
+            segments=[4.0 + 0.5 * (did % 2)] * n
+        )
 
 
 def q_caption_meta(spark, sf_dir):
@@ -5257,7 +4832,8 @@ FROM d
 """
 
 
-def _apng_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def apng_udf(did: int) -> bytes:
     """APNG fixture (round 8): 2 + doc_id%4 solid-gray 8x6 frames at
     level (doc_id*7 + 13*frame) % 256, per-frame delay (1 + doc_id%4)
     / 50 s. Rotation on doc_id%3: 0 carries a non-animated default
@@ -5265,32 +4841,22 @@ def _apng_batch(doc_id: pd.Series) -> pd.Series:
     COMPOSITING fixture (full base, then 4x3 SOURCE patches at (2, 2) —
     late-frame means are the blended closed form); 2 is the plain
     full-canvas form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 2 + did % 4
-        delay = (1 + did % 4, 50)
-        levels = [(did * 7 + 13 * f) % 256 for f in range(n)]
-        if did % 3 == 1:
-            base = [[(levels[0],) * 3] * 8 for _ in range(6)]
-            specs = [(base, 0, 0, delay, 0, 0)]
-            for f in range(1, n):
-                patch = [[(levels[f],) * 3] * 4 for _ in range(3)]
-                specs.append((patch, 2, 2, delay, 0, 0))
-            out.append(pure.apng_encode(specs=specs))
-            continue
-        frames = [[[(lv,) * 3] * 8 for _ in range(6)] for lv in levels]
-        delays = [delay] * n
-        if did % 3 == 0:
-            frames = [[[(255, 0, 0)] * 8] * 6] + frames
-            out.append(pure.apng_encode(frames, delays=delays,
-                                        default_image=True))
-        else:
-            out.append(pure.apng_encode(frames, delays=delays))
-    return pd.Series(out)
-
-
-apng_udf = F.pandas_udf(_apng_batch, BinaryType())
+    n = 2 + did % 4
+    delay = (1 + did % 4, 50)
+    levels = [(did * 7 + 13 * f) % 256 for f in range(n)]
+    if did % 3 == 1:
+        base = [[(levels[0],) * 3] * 8 for _ in range(6)]
+        specs = [(base, 0, 0, delay, 0, 0)]
+        for f in range(1, n):
+            patch = [[(levels[f],) * 3] * 4 for _ in range(3)]
+            specs.append((patch, 2, 2, delay, 0, 0))
+        return pure.apng_encode(specs=specs)
+    frames = [[[(lv,) * 3] * 8 for _ in range(6)] for lv in levels]
+    delays = [delay] * n
+    if did % 3 == 0:
+        frames = [[[(255, 0, 0)] * 8] * 6] + frames
+        return pure.apng_encode(frames, delays=delays, default_image=True)
+    return pure.apng_encode(frames, delays=delays)
 
 
 def q_apng_frames(spark, sf_dir):
@@ -5353,26 +4919,20 @@ FROM d
 """
 
 
-def _mpeg1_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mpeg1_udf(did: int) -> bytes:
     """MPEG-1 video fixture: 2 + doc_id%7 solid-gray 16x16 I pictures at
     luminance 21 + 10*(doc_id%22) + frame_index. Solid frames are
     DC-only and round-trip EXACTLY through the intra codec (dct_recon =
     dct_zz*8, no oddification on DC), so every sampled-frame mean is
     closed-form; n <= 8 = VIDEO_SAMPLE_FRAMES keeps every frame
     sampled."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        n = 2 + did % 7
-        base = 21 + 10 * (did % 22)
-        frames = [
-            [[base + k] * VID_SIDE for _ in range(VID_SIDE)] for k in range(n)
-        ]
-        out.append(pure.mpeg1_encode(frames, VID_FPS))
-    return pd.Series(out)
-
-
-mpeg1_udf = F.pandas_udf(_mpeg1_batch, BinaryType())
+    n = 2 + did % 7
+    base = 21 + 10 * (did % 22)
+    frames = [
+        [[base + k] * VID_SIDE for _ in range(VID_SIDE)] for k in range(n)
+    ]
+    return pure.mpeg1_encode(frames, VID_FPS)
 
 
 def q_mpeg1_frames(spark, sf_dir):
@@ -5382,29 +4942,7 @@ def q_mpeg1_frames(spark, sf_dir):
     with DC prediction and run-level AC VLCs -> intra dequant -> exact
     int64 IDCT): value-check frame count, geometry, duration, and
     first/last sampled-frame luminance against closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mpeg1_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    last_slot = (F.element_at(F.col("feature"), 6) + F.lit(6.0)).cast("int")
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        "content_type",
-        "decode_status",
-        "width",
-        "height",
-        fd(1).alias("n_frames"),
-        fd(5).alias("duration_s"),
-        fd(7).alias("mean_first"),
-        F.round(
-            F.element_at(F.col("feature"), last_slot).cast("double"), 6
-        ).alias("mean_last"),
-    )
+    return _media_features(spark, sf_dir, mpeg1_udf, *_clip_cols())
 
 
 SQL_MPEG1_FRAMES = f"""
@@ -5420,7 +4958,8 @@ FROM documents
 """
 
 
-def _mpeg_ip_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mpeg_ip_udf(did: int) -> bytes:
     """I+P MPEG-1 fixture per doc (round 6 forward-MC tier): a 48x16
     I picture with three 16px column bands (L, L+21, L+42 where
     L = 16*(doc_id%13)+8 — offsets divisible by 3 keep every sampled
@@ -5436,22 +4975,13 @@ def _mpeg_ip_batch(doc_id: pd.Series) -> pd.Series:
     dyadic. Solid 16px bands are DC-exact through the intra path and
     MC moves whole columns, so all four sampled frame means are closed
     forms of doc_id."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        l0 = 16 * (did % 13) + 8
-        row = [l0] * 16 + [l0 + 21] * 16 + [l0 + 42] * 16
-        first = [list(row) for _ in range(16)]
-        out.append(
-            pure.mpeg1_encode_ip(
-                first,
-                [("copy",), ("shift", -16), ("wideshift", 17, 2)],
-            )
-        )
-    return pd.Series(out)
-
-
-mpeg_ip_udf = F.pandas_udf(_mpeg_ip_batch, BinaryType())
+    l0 = 16 * (did % 13) + 8
+    row = [l0] * 16 + [l0 + 21] * 16 + [l0 + 42] * 16
+    first = [list(row) for _ in range(16)]
+    return pure.mpeg1_encode_ip(
+        first,
+        [("copy",), ("shift", -16), ("wideshift", 17, 2)],
+    )
 
 
 def q_mpeg_ip_frames(spark, sf_dir):
@@ -5463,27 +4993,18 @@ def q_mpeg_ip_frames(spark, sf_dir):
     [-16f, 16f-1] reconstruction): value-check frame count, duration,
     and all four sampled-frame luminance means (I, copied P,
     column-shifted P, f_code-2 wide-shifted P) against closed forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mpeg_ip_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mpeg_ip_udf,
         "content_type",
         "decode_status",
         "width",
         "height",
-        fd(1).alias("n_frames"),
-        fd(5).alias("duration_s"),
-        fd(7).alias("mean_i"),
-        fd(8).alias("mean_copy"),
-        fd(9).alias("mean_shift"),
-        fd(10).alias("mean_wide"),
+        _feat_d(1).alias("n_frames"),
+        _feat_d(5).alias("duration_s"),
+        _feat_d(7).alias("mean_i"),
+        _feat_d(8).alias("mean_copy"),
+        _feat_d(9).alias("mean_shift"),
+        _feat_d(10).alias("mean_wide"),
     )
 
 
@@ -5507,7 +5028,8 @@ FROM d
 """
 
 
-def _mpeg_ipb_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def mpeg_ipb_udf(did: int) -> bytes:
     """I+P+B MPEG-1 fixture per doc (round 6 bidirectional tier): a
     48x16 I picture with three 16px bands (L, L+24, L+48 where
     L = 8*(doc_id%25)+8 keeps every pixel <= 248 and every sampled mean
@@ -5516,21 +5038,12 @@ def _mpeg_ipb_batch(doc_id: pd.Series) -> pd.Series:
     run (equals P), and forward-only -16 (the shifted I, also equals
     P). Coded order I P B B B; display order I B B B P via
     temporal_reference."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        l0 = 8 * (did % 25) + 8
-        row = [l0] * 16 + [l0 + 24] * 16 + [l0 + 48] * 16
-        first = [list(row) for _ in range(16)]
-        out.append(
-            pure.mpeg1_encode_ipb(
-                first, -16, [("interp",), ("bwd",), ("fwd", -16)]
-            )
-        )
-    return pd.Series(out)
-
-
-mpeg_ipb_udf = F.pandas_udf(_mpeg_ipb_batch, BinaryType())
+    l0 = 8 * (did % 25) + 8
+    row = [l0] * 16 + [l0 + 24] * 16 + [l0 + 48] * 16
+    first = [list(row) for _ in range(16)]
+    return pure.mpeg1_encode_ipb(
+        first, -16, [("interp",), ("bwd",), ("fwd", -16)]
+    )
 
 
 def q_mpeg_ipb_frames(spark, sf_dir):
@@ -5540,28 +5053,19 @@ def q_mpeg_ipb_frames(spark, sf_dir):
     B skip semantics, temporal_reference display reordering):
     value-checks all five display-ordered sampled means against closed
     forms."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        mpeg_ipb_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe")
-    fd = _feat_d
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
+    return _media_features(
+        spark, sf_dir, mpeg_ipb_udf,
         "content_type",
         "decode_status",
         "width",
         "height",
-        fd(1).alias("n_frames"),
-        fd(5).alias("duration_s"),
-        fd(7).alias("mean_i"),
-        fd(8).alias("mean_b_interp"),
-        fd(9).alias("mean_b_bwd"),
-        fd(10).alias("mean_b_fwd"),
-        fd(11).alias("mean_p"),
+        _feat_d(1).alias("n_frames"),
+        _feat_d(5).alias("duration_s"),
+        _feat_d(7).alias("mean_i"),
+        _feat_d(8).alias("mean_b_interp"),
+        _feat_d(9).alias("mean_b_bwd"),
+        _feat_d(10).alias("mean_b_fwd"),
+        _feat_d(11).alias("mean_p"),
     )
 
 
@@ -5586,58 +5090,44 @@ FROM d
 """
 
 
-def _audio_container_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def audio_container_udf(did: int) -> bytes:
     """Per-doc audio container rotating mp3 / ogg / flac / ADTS-AAC
     (round 4; round 7 adds the ADTS frame walk — VERDICT r6 #7).
     Geometries chosen so every duration is an exact millisecond multiple
     (48 kHz mp3 frames = 24 ms; ogg/flac sample counts are rate
     multiples of 0.1 s; the AAC rates 64/32/16/8 kHz make each
     1024-sample frame an exact-ms length)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        kind = did % 4
-        if kind == 0:
-            out.append(
-                pure.mp3_envelope_encode(
-                    10 + did % 20, 128, 48000,
-                    title=f"track {did}", artist=f"artist {did % 5}",
-                )
+    kind = did % 4
+    if kind == 0:
+        return pure.mp3_envelope_encode(
+            10 + did % 20, 128, 48000,
+            title=f"track {did}", artist=f"artist {did % 5}",
+        )
+    elif kind == 1:
+        if did % 2:
+            return pure.ogg_envelope_encode(
+                "vorbis", 48000, 2,
+                total_samples=4800 * (1 + did % 5), n_audio_pages=2,
             )
-        elif kind == 1:
-            if did % 2:
-                out.append(
-                    pure.ogg_envelope_encode(
-                        "vorbis", 48000, 2,
-                        total_samples=4800 * (1 + did % 5), n_audio_pages=2,
-                    )
-                )
-            else:
-                # round 8 (VERDICT r7 #4): real Opus packets so the TOC
-                # walk is under the value-hash gate — config sweeps all
-                # 32 RFC 6716 entries, frame-count codes 0-3, 1-3
-                # packets per stream, all closed-form from doc_id.
-                k = did // 2
-                cfg, c = k % 32, k % 4
-                out.append(
-                    pure.ogg_opus_encode(
-                        [(cfg, k % 2, c, 1 + k % 2, 6)] * (1 + k % 3),
-                        channels=1 + k % 2,
-                    )
-                )
-        elif kind == 2:
-            out.append(pure.flac_encode([7] * (1600 * (1 + did % 4)), 16000))
         else:
-            j = did // 4  # distinct per aac doc (did % 4 == 3 here)
-            out.append(
-                pure.adts_encode(
-                    4 + j % 12, j % 4, 2 + 3 * ((j // 4) % 4), 1 + j % 2
-                )
+            # round 8 (VERDICT r7 #4): real Opus packets so the TOC
+            # walk is under the value-hash gate — config sweeps all
+            # 32 RFC 6716 entries, frame-count codes 0-3, 1-3
+            # packets per stream, all closed-form from doc_id.
+            k = did // 2
+            cfg, c = k % 32, k % 4
+            return pure.ogg_opus_encode(
+                [(cfg, k % 2, c, 1 + k % 2, 6)] * (1 + k % 3),
+                channels=1 + k % 2,
             )
-    return pd.Series(out)
-
-
-audio_container_udf = F.pandas_udf(_audio_container_batch, BinaryType())
+    elif kind == 2:
+        return pure.flac_encode([7] * (1600 * (1 + did % 4)), 16000)
+    else:
+        j = did // 4  # distinct per aac doc (did % 4 == 3 here)
+        return pure.adts_encode(
+            4 + j % 12, j % 4, 2 + 3 * ((j // 4) % 4), 1 + j % 2
+        )
 
 
 def q_audio_meta(spark, sf_dir):
@@ -5772,37 +5262,25 @@ FROM o
 """
 
 
-def _video_container_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def video_container_udf(did: int) -> bytes:
     """Per-doc video container rotating mp4 / webm / avi (round 4 — ISO
     BMFF box walk, Matroska EBML walk, RIFF chunk walk; codec DSP
     stubbed, envelopes real)."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        w, h = 160 + 16 * (did % 8), 90 + 9 * (did % 8)
-        kind = did % 3
-        if kind == 0:
-            dur = round(1.0 + (did % 50) / 10.0, 3)
-            out.append(
-                pure.mp4_envelope_encode(
-                    dur, 1000, w, h, b"avc1" if did % 2 == 0 else b"hev1"
-                )
-            )
-        elif kind == 1:
-            dur = round(1.0 + (did % 50) / 10.0, 3)
-            out.append(
-                pure.webm_envelope_encode(
-                    dur, w, h, "V_VP9" if did % 2 == 1 else "V_AV1"
-                )
-            )
-        else:
-            out.append(
-                pure.avi_envelope_encode(25 * (1 + did % 5), 25, w, h, b"MJPG")
-            )
-    return pd.Series(out)
-
-
-video_container_udf = F.pandas_udf(_video_container_batch, BinaryType())
+    w, h = 160 + 16 * (did % 8), 90 + 9 * (did % 8)
+    kind = did % 3
+    if kind == 0:
+        dur = round(1.0 + (did % 50) / 10.0, 3)
+        return pure.mp4_envelope_encode(
+            dur, 1000, w, h, b"avc1" if did % 2 == 0 else b"hev1"
+        )
+    elif kind == 1:
+        dur = round(1.0 + (did % 50) / 10.0, 3)
+        return pure.webm_envelope_encode(
+            dur, w, h, "V_VP9" if did % 2 == 1 else "V_AV1"
+        )
+    else:
+        return pure.avi_envelope_encode(25 * (1 + did % 5), 25, w, h, b"MJPG")
 
 
 def q_video_meta(spark, sf_dir):
@@ -5872,21 +5350,15 @@ FROM documents
 """
 
 
-def _solid_pair_batch(doc_id: pd.Series) -> pd.Series:
+@_doc_udf(BinaryType())
+def solid_pair_udf(did: int) -> bytes:
     """Two solid 16x16 PNGs per doc, gray a vs a+delta (delta rotates
     0/40/80 by doc_id%3) — every comparison statistic is closed-form."""
-    out = []
-    for did in doc_id:
-        did = int(did)
-        a = 20 + did % 150
-        b = a + (did % 3) * 40
-        pa = pure.png_encode([[(a, a, a)] * 16 for _ in range(16)])
-        pb = pure.png_encode([[(b, b, b)] * 16 for _ in range(16)])
-        out.append(pa + b"|SPLIT|" + pb)
-    return pd.Series(out)
-
-
-solid_pair_udf = F.pandas_udf(_solid_pair_batch, BinaryType())
+    a = 20 + did % 150
+    b = a + (did % 3) * 40
+    pa = pure.png_encode([[(a, a, a)] * 16 for _ in range(16)])
+    pb = pure.png_encode([[(b, b, b)] * 16 for _ in range(16)])
+    return pa + b"|SPLIT|" + pb
 
 
 def q_image_compare(spark, sf_dir):
@@ -5952,16 +5424,7 @@ def q_image_ahash_dedup(spark, sf_dir):
     """Image near-dup dedup by perceptual hash: the decoded aHash groups
     must EXACTLY reproduce the planted pattern classes (doc_id % 8) —
     skew-safe two-phase canonical election + dup counts over the ahash key."""
-    from fa_spark.stages.multimodal import extract_media_features
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        step_png_udf("doc_id").alias("content"),
-    )
-    feats = extract_media_features(media, mode="describe").select(
-        F.col("media_id").cast("long").alias("doc_id"), "ahash"
-    )
+    feats = _media_features(spark, sf_dir, step_png_udf, "ahash")
     # skew-safe two-phase election (round-2 VERDICT "what's wrong" #2: a
     # window over raw ahash puts a degenerate class — blank images — in one
     # task; the partial-agg groupBy + AQE-splittable join back does not).

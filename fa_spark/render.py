@@ -126,7 +126,8 @@ def read_text_reports(spark, path: str) -> list[str]:
 def preflight(spark) -> dict[str, str]:
     """Environment verification matrix, logged before a run (reference runs
     tool --version checks; here: library versions + the Spark confs the
-    pipeline depends on)."""
+    pipeline depends on). Each conf reads its effective value, Spark's own
+    default included."""
     import numpy
     import pandas
     import pyarrow
@@ -138,10 +139,8 @@ def preflight(spark) -> dict[str, str]:
         "pandas": pandas.__version__,
         "numpy": numpy.__version__,
         "master": spark.sparkContext.master,
-        "arrow_enabled": spark.conf.get(
-            "spark.sql.execution.arrow.pyspark.enabled", "false"
-        ),
-        "aqe_enabled": spark.conf.get("spark.sql.adaptive.enabled", "false"),
-        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions", ""),
-        "session_tz": spark.conf.get("spark.sql.session.timeZone", ""),
+        "arrow_enabled": spark.conf.get("spark.sql.execution.arrow.pyspark.enabled"),
+        "aqe_enabled": spark.conf.get("spark.sql.adaptive.enabled"),
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "session_tz": spark.conf.get("spark.sql.session.timeZone"),
     }

@@ -162,24 +162,14 @@ def _simhash_batch(text: pd.Series) -> pd.Series:
     return pd.Series([_to_i64(pure.simhash64(t)) if t else 0 for t in text])
 
 
-def _fingerprint_batch(text: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            [_to_i64(h) for h in pure.rolling_fingerprint(t)] if t else []
-            for t in text
-        ]
-    )
-
-
 FP_FULL_MAX_TOKENS = 8192  # docs past this are excluded (symmetric in SQL)
 
 
 def _fingerprint_full_batch(text: pd.Series) -> pd.Series:
-    """Dense variant: keep EVERY 8-token window hash (keep_mod=1), distinct.
-    The shared-count between two docs then equals their shared distinct
-    8-gram count — exactly recomputable in SQL (the correctness hook the
-    sparse winnowing form cannot offer). The sparse form (keep_mod=16)
-    remains the 100-TB scale path. The cap matches FP_FULL_MAX_TOKENS so the
+    """Keep EVERY 8-token window hash (keep_mod=1), distinct. The
+    shared-count between two docs then equals their shared distinct 8-gram
+    count — exactly recomputable in SQL, which a sparse winnowing form
+    (keep_mod > 1) cannot offer. The cap matches FP_FULL_MAX_TOKENS so the
     'shared == exact' invariant never silently truncates; the query bounds
     its universe to that token count on BOTH engines."""
     out = []
@@ -200,7 +190,6 @@ from pyspark.sql.types import ArrayType, LongType  # noqa: E402
 
 minhash_udf = F.pandas_udf(_minhash_batch, ArrayType(LongType()))
 simhash_udf = F.pandas_udf(_simhash_batch, LongType())
-fingerprint_udf = F.pandas_udf(_fingerprint_batch, ArrayType(LongType()))
 fingerprint_full_udf = F.pandas_udf(_fingerprint_full_batch, ArrayType(LongType()))
 
 

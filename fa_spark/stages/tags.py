@@ -1,9 +1,9 @@
-"""Tag ranking + slug stage (reference A1/W1/M10,
+"""Tag ranking + filename stage (reference A1/W1/M10,
 /root/reference/src/cli/utils/render.py:13-166).
 
 Tag ranking is 100% native expressions — explode/filter/groupBy/window —
 so it rides WholeStageCodegen and partial aggregation; the only Python here
-is the slug cascade (regex cascade pinned by golden fixtures).
+is the filename cascade (``filename_udf``).
 """
 
 from __future__ import annotations
@@ -45,31 +45,6 @@ def top_tags(df: DataFrame, id_col: str, text_col: str, k: int = 10) -> DataFram
         tag_counts(df, id_col, text_col)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-    )
-
-
-def tags_array(df: DataFrame, id_col: str, text_col: str, k: int = 10) -> DataFrame:
-    """(id, tags array<string>) — collect_list over the ranked rows. The
-    sort_array on (rank, tag) structs keeps array order deterministic."""
-    ranked = top_tags(df, id_col, text_col, k)
-    return (
-        ranked.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("rank"), F.col("tag")))
-            ).alias("_rt")
-        )
-        .select(id_col, F.transform("_rt", lambda s: s["tag"]).alias("tags"))
-    )
-
-
-@F.pandas_udf(StringType())
-def slug_udf(title: pd.Series, text: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            pure.page_slug(t if t is not None else "", x if x is not None else "")
-            for t, x in zip(title, text)
-        ]
     )
 
 

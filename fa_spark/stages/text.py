@@ -1,6 +1,6 @@
 """Text analytics for training-data pipelines — all native expressions.
 
-Language-ID, quality scoring, token counting: these are hot-path operators at
+Language-ID, token counting, n-gram sets: these are hot-path operators at
 100 TB, so they are pure Catalyst expressions (WholeStageCodegen, no Arrow
 transfer, no Python). The pandas-UDF variants in stages/analyze.py exist for
 the byte-identical pages pipeline; THESE are the scale path over `text`
@@ -40,29 +40,6 @@ def detect_lang_expr(text_col: str) -> Column:
     return F.when(
         (n == 0) | (best * 20 < n), F.lit("und")
     ).otherwise(pick)
-
-
-def quality_exprs(text_col: str) -> list[Column]:
-    """Quality-feature columns (aliased; shared names with the SQL oracle)."""
-    toks = tokens_expr(text_col)
-    n = F.length(text_col)
-    words = F.size(toks)
-    alpha = F.length(F.regexp_replace(text_col, "[^A-Za-z]", ""))
-    digits = F.length(F.regexp_replace(text_col, "[^0-9]", ""))
-    return [
-        n.alias("n_chars"),
-        words.alias("n_words"),
-        F.round(F.size(F.array_distinct(toks)) / words, 6).alias("uniq_ratio"),
-        F.round(alpha / n, 6).alias("alpha_ratio"),
-        F.round(digits / n, 6).alias("digit_ratio"),
-        F.round(
-            F.aggregate(
-                toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-            )
-            / words,
-            6,
-        ).alias("mean_word_len"),
-    ]
 
 
 def token_count_exprs(text_col: str) -> list[Column]:

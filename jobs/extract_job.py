@@ -8,65 +8,13 @@
 Resumable: re-running with the same --input/--output skips already-processed
 (url, sha) pairs via the lineage anti-join (fa_spark.lineage). The run
 timestamp is an explicit parameter — never wall clock inside the job
-(SURVEY.md §7.3 determinism discipline).
+(SURVEY.md §7.3 determinism discipline). This is ``fa_spark.cli analyze``:
+the same flags, and the run's summary as one JSON line on stdout.
 """
 
-from __future__ import annotations
+import sys
 
-import argparse
-import datetime as dt
-import json
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--run-id", required=True)
-    ap.add_argument("--committed-at", default=None, help="ISO timestamp")
-    ap.add_argument("--buckets", type=int, default=64)
-    args = ap.parse_args()
-
-    committed_at = (
-        dt.datetime.fromisoformat(args.committed_at)
-        if args.committed_at
-        else dt.datetime.now(dt.timezone.utc)  # job parameter, resolved once
-    )
-
-    from pyspark.sql import SparkSession
-
-    from fa_spark.lineage import run_resumable
-    from fa_spark.pipeline import JobConfig, summary
-
-    spark = SparkSession.builder.appName(f"fa-extract-{args.run_id}").getOrCreate()
-    pages = spark.read.parquet(args.input)
-    run_resumable(
-        spark,
-        pages,
-        args.output,
-        args.run_id,
-        committed_at,
-        JobConfig(run_id=args.run_id, buckets=args.buckets),
-    )
-    # summarize the just-committed parquet (the returned DataFrame is no
-    # longer cached — re-evaluating it would re-run the whole UDF pipeline)
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fa_spark.lineage import read_analysis
-
-    if os.path.isdir(os.path.join(args.output, "analysis")):
-        committed = read_analysis(spark, args.output).where(
-            F.col("run_id") == args.run_id
-        )
-        counts = summary(committed).collect()
-        payload = counts[0].asDict() if counts else {"analyses": 0}
-    else:
-        payload = {"analyses": 0}
-    print(json.dumps(payload))
-    spark.stop()
-
+from fa_spark.cli import main
 
 if __name__ == "__main__":
-    main()
+    main(["analyze", *sys.argv[1:]])

@@ -4,32 +4,45 @@ Each asserts the plan property that makes the operator survive 100x data."""
 
 from __future__ import annotations
 
+import inspect
+import re
+
 import pytest
 
+from fa_spark.queries import REGISTRY
+
 SF = "/root/testdata/sf0.001"
+MEDIA_FEATURE_QUERIES = [
+    name for name, (fn, _sql) in REGISTRY.items()
+    if re.search(r"\b_media_features\(", inspect.getsource(fn))
+]
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_media_queries_scan_one_column(spark):
+def test_media_feature_queries_found():
+    assert len(MEDIA_FEATURE_QUERIES) >= 25, MEDIA_FEATURE_QUERIES
+
+
+@pytest.mark.parametrize("name", MEDIA_FEATURE_QUERIES)
+def test_media_queries_scan_one_column(spark, name):
     """The decode fixtures synthesize from doc_id alone — the parquet scan
     must read ONE column of the documents table, not all five (column
-    pruning through the pandas-UDF synthesis stage)."""
-    from fa_spark.queries import q_jpeg_features, q_raster_features
-
-    for q in (q_jpeg_features, q_raster_features):
-        plan = _plan(q(spark, SF))
-        scans = [l for l in plan.splitlines() if "ReadSchema" in l]
-        assert scans, plan
-        for s in scans:
-            assert "struct<doc_id:bigint>" in s, s
+    pruning through the pandas-UDF synthesis stage), and the synthesized
+    blob never crosses an Exchange."""
+    plan = _plan(REGISTRY[name][0](spark, SF))
+    scans = [l for l in plan.splitlines() if "ReadSchema" in l]
+    assert scans, plan
+    for s in scans:
+        assert "struct<doc_id:bigint>" in s, s
+    for line in plan.splitlines():
+        if "Exchange" in line:
+            assert "content" not in line, line
 
 
 def test_pricing_summary_pushes_filter(spark):
-    from fa_spark.queries import REGISTRY
-
     plan = _plan(REGISTRY["pricing_summary"][0](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # projection pruned: no l_comment in the scan schema
@@ -38,8 +51,6 @@ def test_pricing_summary_pushes_filter(spark):
 
 
 def test_nation_revenue_broadcasts_dims(spark):
-    from fa_spark.queries import REGISTRY
-
     plan = _plan(REGISTRY["nation_revenue"][0](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
@@ -75,11 +86,15 @@ def test_resumable_fresh_run_prunes_anti_join(spark, pages_df, tmp_path):
             assert "html" not in line, line
     resumed = _plan(lineage.run_resumable(spark, pages, base, "r2", ts))
     assert "LeftAnti" in resumed, resumed
+    # default_session leaves these to Spark's defaults, which the resumed
+    # anti-join relies on
+    for key in ("spark.sql.adaptive.enabled",
+                "spark.sql.adaptive.skewJoin.enabled",
+                "spark.sql.optimizer.runtime.bloomFilter.enabled"):
+        assert spark.conf.get(key) == "true", key
 
 
 def test_dataset_split_zero_exchange(spark):
-    from fa_spark.queries import REGISTRY
-
     plan = _plan(REGISTRY["dataset_split"][0](spark, SF))
     assert "Exchange" not in plan
 
