@@ -29,6 +29,7 @@ import zlib
 from collections import Counter
 from collections.abc import Collection
 from dataclasses import dataclass, field
+from functools import lru_cache
 from html import unescape
 from html.parser import HTMLParser
 
@@ -598,33 +599,27 @@ def classify_doc_type(blocks: list[dict], parser: _BlockParser, sniffed: str) ->
     return "boilerplate"
 
 
-def extract_main_text(data: bytes | None) -> ExtractResult:
-    """The flagship operator: bytes -> main content text.
-
-    Cascade (attempt counter mirrors the reference's retry bookkeeping,
-    json_utils.py:320-322):
-      1. DOM block classification (title excluded; content blocks joined "\n\n")
-      2. lenient regex strip when the DOM pass found nothing but text exists
-      3. empty result with explicit status
-
-    PDF bytes route through the layout parser (north_rule "PDF/layout parse");
-    other binary types are skipped with an explicit status.
-    """
+def _extract_with_ctx(data: bytes):
+    """The extraction cascade, once for every caller (extract_main_text,
+    analyze_document): returns (sniff, ExtractResult, html_ctx) where
+    html_ctx is (charset, parser) for html/text/xml inputs (what
+    _metadata_from_parse needs) and None otherwise."""
     sn = sniff_bytes(data)
     ct = sn["content_type"]
     if ct == "empty":
-        return ExtractResult("", "empty", "skipped", 0, "")
+        return sn, ExtractResult("", "empty", "skipped", 0, ""), None
     if ct == "pdf":
-        return extract_pdf_text(data)
+        return sn, extract_pdf_text(data), None
     if ct == "zip":
         # round 8: OOXML (docx) and EPUB are first-class crawled
         # document types (reference document mode, M6) — route to the
         # archive-document extractor; other zips skip as before
-        return extract_zip_document_text(data)
+        return sn, extract_zip_document_text(data), None
     if ct not in ("html", "text", "xml"):
-        return ExtractResult("", ct, "skipped", 0, "")
-    html_str, _cs = decode_bytes(data)
+        return sn, ExtractResult("", ct, "skipped", 0, ""), None
+    html_str, cs = decode_bytes(data)
     blocks, parser = extract_blocks(html_str)
+    ctx = (cs, parser)
     title = _norm_ws("".join(parser.title_parts))
     doc_type = classify_doc_type(blocks, parser, ct)
     content = [
@@ -639,17 +634,32 @@ def extract_main_text(data: bytes | None) -> ExtractResult:
             if b["is_content"] and b["tag"] not in _HEADING_TAGS
         ]
         desc = (body[0] if body else content[0])[:DESCRIPTION_LEN]
-        return ExtractResult(
+        return sn, ExtractResult(
             "\n\n".join(content), doc_type, "success", 1, title, desc
-        )
+        ), ctx
     # attempt 2: lenient strip
     stripped = _lenient_strip(html_str)
     if stripped:
-        return ExtractResult(
+        return sn, ExtractResult(
             stripped, doc_type, "success_lenient", 2, title,
             stripped[:DESCRIPTION_LEN],
-        )
-    return ExtractResult("", doc_type, "empty", 3, title)
+        ), ctx
+    return sn, ExtractResult("", doc_type, "empty", 3, title), ctx
+
+
+def extract_main_text(data: bytes | None) -> ExtractResult:
+    """The flagship operator: bytes -> main content text.
+
+    Cascade (attempt counter mirrors the reference's retry bookkeeping,
+    json_utils.py:320-322):
+      1. DOM block classification (title excluded; content blocks joined "\n\n")
+      2. lenient regex strip when the DOM pass found nothing but text exists
+      3. empty result with explicit status
+
+    PDF bytes route through the layout parser (north_rule "PDF/layout parse");
+    other binary types are skipped with an explicit status.
+    """
+    return _extract_with_ctx(data or b"")[1]
 
 
 # ---------------------------------------------------------------------------
@@ -1013,6 +1023,14 @@ def extract_metadata(data: bytes | None) -> dict[str, str]:
     analyzer.py:219)."""
     if not data:
         return {}
+    # one sniff drives the container dispatch — no second, weaker copy of
+    # the mp3 frame-sync rule (round-4 review finding)
+    ct = sniff_bytes(data)["content_type"]
+    if ct in ("html", "text", "xml"):
+        html_str, cs = decode_bytes(data)
+        _blocks, parser = extract_blocks(html_str)
+        title = _norm_ws("".join(parser.title_parts))
+        return _metadata_from_parse(data, cs, parser, title)
     out: dict[str, str] = {}
     out.update(_parse_png_meta(data))
     out.update(_parse_jpeg_meta(data))
@@ -1020,12 +1038,9 @@ def extract_metadata(data: bytes | None) -> dict[str, str]:
     out.update(_parse_bmp_meta(data))
     out.update(_parse_tiff_meta(data))
     out.update(_parse_pdf_meta(data))
-    sn = sniff_bytes(data)
-    # one sniff drives the container dispatch — no second, weaker copy of
-    # the mp3 frame-sync rule (round-4 review finding)
-    if sn["content_type"] == "mp3":
+    if ct == "mp3":
         out.update(_parse_mp3_meta(data))
-    elif sn["content_type"] == "aac":
+    elif ct == "aac":
         out.update(_parse_adts_meta(data))
     out.update(_parse_ogg_meta(data))
     out.update(_parse_flac_meta(data))
@@ -1041,31 +1056,11 @@ def extract_metadata(data: bytes | None) -> dict[str, str]:
     out.update(_parse_zip_meta(data))
     out.update(_parse_gzip_meta(data))
     out.update(_parse_zstd_meta(data))
-    if sn["content_type"] == "riff" and len(data) >= 12:
+    if ct == "riff" and len(data) >= 12:
         # RIFF form type (WAVE / AVI / ...) — lets downstream consumers
         # (e.g. lineage stub accounting) split decodable WAVE from the
         # stubbed non-WAVE RIFF family without re-reading the bytes
         out["riff:format"] = data[8:12].decode("latin-1").strip("\x00 ")
-    if sn["content_type"] in ("html", "text", "xml"):
-        out.update(_parse_svg_meta(data))
-        out.update(_parse_caption_meta(data))
-        out.update(_parse_m3u8_meta(data))
-        html_str, cs = decode_bytes(data)
-        out["charset"] = cs
-        _blocks, parser = extract_blocks(html_str)
-        for k, v in sorted(parser.meta.items()):
-            out[f"meta:{k}"] = v
-        title = _norm_ws("".join(parser.title_parts))
-        if title:
-            out["title"] = title
-        # data-URI embedded images (fixture case: EXIF inside HTML)
-        n_img = 0
-        for m in _DATA_URI_RE.finditer(data):
-            n_img += 1
-            if n_img >= 8:
-                break
-        if n_img:
-            out["embedded_images"] = str(n_img)
     out["bytes"] = str(len(data))
     return out
 
@@ -1094,13 +1089,6 @@ def scan_text(text: str, compiled) -> list[str]:
     return [name for name, rx in compiled if rx.search(text)]
 
 
-def count_matches(text: str, pattern: str, ignore_case: bool = True) -> int:
-    """ripgrep-equivalent match count (reference counts output lines;
-    we count non-overlapping matches — documented divergence, analyzer.py:610)."""
-    flags = re.IGNORECASE if ignore_case else 0
-    return len(re.findall(pattern, text, flags))
-
-
 # ---------------------------------------------------------------------------
 # 6. Tag cleaning / ranking (reference A1, render.py:13-38)
 # ---------------------------------------------------------------------------
@@ -1115,19 +1103,11 @@ TOP_K_TAGS = 10
 # ~14% of the fused analyzer; natural-language vocabulary repeats across
 # every doc a worker sees, so the strip/lower/len/generic-probe work for a
 # given raw token is a pure function worth caching). "" = dropped. Bounded
-# like _STABLE64_CACHE so a pathological corpus degrades to uncached work.
-_CLEAN_TAG_CACHE: dict = {}
-_CLEAN_TAG_CACHE_MAX = 1 << 18
-
-
+# like _stable64's memo so a pathological corpus cannot grow it unchecked.
+@lru_cache(maxsize=1 << 18)
 def _clean_tag(t: str) -> str:
-    c = _CLEAN_TAG_CACHE.get(t)
-    if c is None:
-        n = t.strip().lower()
-        c = "" if (not n or len(n) <= 2 or n in GENERIC_TAGS) else n
-        if len(_CLEAN_TAG_CACHE) < _CLEAN_TAG_CACHE_MAX:
-            _CLEAN_TAG_CACHE[t] = c
-    return c
+    n = t.strip().lower()
+    return "" if (not n or len(n) <= 2 or n in GENERIC_TAGS) else n
 
 
 def clean_tags(tags: list[str]) -> list[str]:
@@ -1373,37 +1353,6 @@ def validate_json_structure(obj: dict | None, mode: str = "describe") -> bool:
         return False
     fields = EXPECTED_FIELDS_BY_MODE.get(mode, EXPECTED_FIELDS_BY_MODE["describe"])
     return all(f in obj for f in fields)
-
-
-def process_model_output(text: str, mode: str = "describe") -> dict:
-    """Parse-or-fallback envelope (json_utils.py:288-348): malformed input
-    becomes a typed fallback record, never an exception."""
-    fields = EXPECTED_FIELDS_BY_MODE.get(mode, EXPECTED_FIELDS_BY_MODE["describe"])
-    obj = extract_json_from_text(text, fields)
-    if obj is not None and validate_json_structure(obj, mode):
-        obj.setdefault("metadata", {})
-        obj["metadata"]["json_parsing_failed"] = False
-        return obj
-    if obj is not None:
-        # back-fill missing fields with defaults (fastvlm/json.py:187-205)
-        defaults = {
-            "description": text[:200],
-            "tags": [],
-            "objects": [],
-            "text": "",
-            "document_type": "unknown",
-        }
-        for f in fields:
-            obj.setdefault(f, defaults.get(f, ""))
-        obj.setdefault("metadata", {})
-        obj["metadata"]["json_parsing_failed"] = False
-        obj["metadata"]["backfilled"] = True
-        return obj
-    return {
-        "description": (text or "")[:200],
-        "tags": [],
-        "metadata": {"json_parsing_failed": True},
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -1731,9 +1680,9 @@ _SHINGLE_COEF = _np.array(
 def _shingle_windows(toks: list[str], k: int) -> "_np.ndarray":
     """Raw per-window shingle hashes (uint64 array, duplicates KEPT, window
     order): the minhash consumer takes a per-seed min, which is invariant
-    to duplicates and order, so it skips _shingle_ids' dedup/first-seen
-    pass entirely (round 4 — np.unique + the int-list conversion were ~6%
-    of the fused analyzer)."""
+    to duplicates and order, so it needs no dedup/first-seen pass
+    (round 4 — np.unique + the int-list conversion were ~6% of the fused
+    analyzer)."""
     if len(toks) < k:
         joined = " ".join(toks)
         if not joined:
@@ -1761,58 +1710,22 @@ def _shingle_windows(toks: list[str], k: int) -> "_np.ndarray":
     return _mix64(acc)
 
 
-def _shingle_ids(toks: list[str], k: int) -> list[int]:
-    """Stable 64-bit shingle ids from pre-split tokens, vectorized (round 3
-    — profiling showed the per-window ``" ".join`` + double-crc32 at ~25%
-    of the fused analyzer's per-doc cost): hash each DISTINCT token once
-    (memoized crc32 pair — stopwords repeat constantly), then combine every
-    k-window with positional odd multipliers + a splitmix64 finalizer in
-    one numpy pass. First-seen order preserved (the round-2 contract)."""
-    ids = _shingle_windows(toks, k)
-    if ids.size == 0:
-        return []
-    _, first = _np.unique(ids, return_index=True)
-    first.sort()
-    return [int(ids[i]) for i in first]
-
-
-def shingles(text: str, k: int = 5) -> list[int]:
-    """k-word shingles -> stable 64-bit ids (token crc32 pair + positional
-    combine; no Python hash())."""
-    return _shingle_ids(tokenize(text), k)
-
-
 # Cross-document token-hash memo (round 4 — profiling showed _stable64 at
 # ~7% of the fused analyzer: natural-language vocabulary repeats across
 # every doc a worker sees, so a per-doc memo rehashes the same stopwords
 # thousands of times per batch). Bounded so a pathological corpus (random
-# strings) cannot grow it past ~26 MB per worker; at the cap the function
-# silently degrades to uncached hashing.
-_STABLE64_CACHE: dict = {}
-_STABLE64_CACHE_MAX = 1 << 18
-
-
+# strings) cannot grow it without limit; at the cap the least recently
+# used tokens are evicted.
+@lru_cache(maxsize=1 << 18)
 def _stable64(s: str) -> int:
-    h = _STABLE64_CACHE.get(s)
-    if h is None:
-        b = s.encode("utf-8")
-        h = (zlib.crc32(b) << 32) | zlib.crc32(b[::-1] + b"\x01")
-        if len(_STABLE64_CACHE) < _STABLE64_CACHE_MAX:
-            _STABLE64_CACHE[s] = h
-    return h
+    b = s.encode("utf-8")
+    return (zlib.crc32(b) << 32) | zlib.crc32(b[::-1] + b"\x01")
 
 
 def minhash_signature(text: str, num_hashes: int = 64, k: int = 5) -> list[int]:
     """MinHash over k-shingles: dimension i = min over shingles of
     splitmix64(shingle_id ^ seed_i). Fully numpy-vectorized, deterministic."""
-    sh = shingles(text, k)
-    if not sh:
-        return [0] * num_hashes
-    x = _np.array(sh, dtype=_np.uint64)
-    with _np.errstate(over="ignore"):
-        # (num_hashes, n_shingles) broadcast: one vectorized pass
-        m = _mix64(x[None, :] ^ _MINHASH_SEEDS[:num_hashes, None])
-    return [int(v) for v in m.min(axis=1)]
+    return _minhash_shingles(_shingle_windows(tokenize(text), k), num_hashes)
 
 
 def minhash_bands(sig: list[int], bands: int = 16) -> list[int]:
@@ -1827,22 +1740,7 @@ def minhash_bands(sig: list[int], bands: int = 16) -> list[int]:
 
 def simhash64(text: str) -> int:
     """64-bit SimHash over tokens weighted by frequency (numpy-vectorized)."""
-    counts = Counter(tokenize(text))
-    if not counts:
-        return 0
-    hashes = _np.array([_stable64(t) for t in counts], dtype=_np.uint64)
-    weights = _np.array(list(counts.values()), dtype=_np.int64)
-    bits = (hashes[:, None] >> _np.arange(64, dtype=_np.uint64)) & _np.uint64(1)
-    v = ((bits.astype(_np.int64) * 2 - 1) * weights[:, None]).sum(axis=0)
-    out = 0
-    for bit in range(64):
-        if v[bit] > 0:
-            out |= 1 << bit
-    return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+    return _simhash_toks(tokenize(text))
 
 
 def rolling_fingerprint(
@@ -2242,66 +2140,6 @@ def _png_chunk(typ: bytes, body: bytes) -> bytes:
     )
 
 
-def _png_pack_row(vals: list, depth: int) -> bytes:
-    """Pack single-sample values at ``depth`` bits, MSB-first."""
-    if depth == 8:
-        return bytes(vals)
-    per_byte = 8 // depth
-    out = bytearray((len(vals) + per_byte - 1) // per_byte)
-    for i, v in enumerate(vals):
-        shift = 8 - depth * (i % per_byte + 1)
-        out[i // per_byte] |= (v & ((1 << depth) - 1)) << shift
-    return bytes(out)
-
-
-def png_encode_palette(
-    index_rows: list, palette: list, depth: int = 8, interlace: bool = False
-) -> bytes:
-    """Palette (color type 3) PNG writer — fixtures for the round-5
-    general decode path: PLTE + index scanlines at 1/2/4/8 bits
-    MSB-first, optional Adam7 interlace, filter 0 rows."""
-    if depth not in (1, 2, 4, 8):
-        raise ValueError("palette depth must be 1/2/4/8")
-    h = len(index_rows)
-    w = len(index_rows[0]) if h else 0
-    plte = b"".join(bytes(c) for c in palette)
-    passes = _PNG_ADAM7 if interlace else ((0, 0, 1, 1),)
-    raw = bytearray()
-    for xs, ys, xstep, ystep in passes:
-        for y in range(ys, h, ystep):
-            vals = [index_rows[y][x] for x in range(xs, w, xstep)]
-            if vals:
-                raw += b"\x00" + _png_pack_row(vals, depth)
-    ihdr = _struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 1 if interlace else 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", plte)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def png_encode_interlaced(rows: list) -> bytes:
-    """Adam7-interlaced RGB8 PNG writer (fixtures): the 7 passes'
-    filter-0 scanlines in spec order."""
-    h = len(rows)
-    w = len(rows[0]) if h else 0
-    raw = bytearray()
-    for xs, ys, xstep, ystep in _PNG_ADAM7:
-        for y in range(ys, h, ystep):
-            cells = [rows[y][x] for x in range(xs, w, xstep)]
-            if cells:
-                raw += b"\x00" + bytes(v for px in cells for v in px)
-    ihdr = _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
 # Adam7 interlace passes: (xstart, ystart, xstep, ystep)
 _PNG_ADAM7 = (
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -2662,13 +2500,15 @@ def _dequant_idct(zz: "_np.ndarray", quant: "_np.ndarray") -> "_np.ndarray":
 # deterministic canonical Huffman specs (bits-per-length counts + symbol
 # order). DC: 12 category symbols, all 4 bits. AC: EOB + 160 run/size +
 # ZRL = 162 symbols, all 8 bits. All-ones codes stay unused (T.81 rule).
-_HUFF_DC_BITS = [0, 0, 0, 12] + [0] * 12
-_HUFF_DC_VALS = list(range(12))
-_HUFF_AC_BITS = [0] * 7 + [162] + [0] * 8
-_HUFF_AC_VALS = [0x00] + [(r << 4) | s for r in range(16) for s in range(1, 11)] + [0xF0]
+_HUFF_DC_BITS = bytes([0, 0, 0, 12] + [0] * 12)
+_HUFF_DC_VALS = bytes(range(12))
+_HUFF_AC_BITS = bytes([0] * 7 + [162] + [0] * 8)
+_HUFF_AC_VALS = bytes(
+    [0x00] + [(r << 4) | s for r in range(16) for s in range(1, 11)] + [0xF0]
+)
 
 
-def _huff_canonical(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
+def _huff_canonical(bits: bytes, vals: bytes) -> dict[tuple[int, int], int]:
     """(length, code) -> symbol, per the canonical code construction."""
     table = {}
     code = 0
@@ -2683,11 +2523,8 @@ def _huff_canonical(bits: list[int], vals: list[int]) -> dict[tuple[int, int], i
 
 
 # both Huffman caches hand out shared objects: callers must not mutate them
-_HUFF_TABLES_CACHE: dict = {}
-_HUFF_TABLES_CACHE_MAX = 256
-
-
-def _huff_tables(bits: list[int], vals: list[int]):
+@lru_cache(maxsize=256)
+def _huff_tables(bits: bytes, vals: bytes):
     """(canonical map, 256-entry fast table). The fast table resolves every
     code of <= 8 bits from one byte-peek (covers 100% of our generated
     tables and the hot short codes of typical encoder tables); longer codes
@@ -2697,11 +2534,7 @@ def _huff_tables(bits: list[int], vals: list[int]):
     Memoized on the DHT payload (round 9): building the LUT was ~45% of a
     small-image decode, and real corpora overwhelmingly reuse a handful of
     tables (the T.81 Annex K pair above all); the cache is bounded so
-    hostile streams with unique tables degrade to uncached building."""
-    key = (bytes(bits), bytes(vals))
-    hit = _HUFF_TABLES_CACHE.get(key)
-    if hit is not None:
-        return hit
+    hostile streams with unique tables cannot grow it."""
     table = _huff_canonical(bits, vals)
     fast: list = [None] * 256
     for (ln, code), sym in table.items():
@@ -2709,27 +2542,15 @@ def _huff_tables(bits: list[int], vals: list[int]):
             base = code << (8 - ln)
             for suffix in range(1 << (8 - ln)):
                 fast[base | suffix] = (sym, ln)
-    if len(_HUFF_TABLES_CACHE) < _HUFF_TABLES_CACHE_MAX:
-        _HUFF_TABLES_CACHE[key] = (table, fast)
     return table, fast
 
 
-_HUFF_ENCODER_CACHE: dict = {}
-_HUFF_ENCODER_CACHE_MAX = 256
-
-
-def _huff_encoder(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+@lru_cache(maxsize=256)
+def _huff_encoder(bits: bytes, vals: bytes) -> dict[int, tuple[int, int]]:
     """symbol -> (code, length) (inverse of _huff_canonical). Memoized like
     _huff_tables (round 9) — encoders are called with the module-constant
     Annex-K-style tables, so rebuilding per image was pure overhead."""
-    key = (bytes(bits), bytes(vals))
-    hit = _HUFF_ENCODER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    enc = {sym: (code, ln) for (ln, code), sym in _huff_canonical(bits, vals).items()}
-    if len(_HUFF_ENCODER_CACHE) < _HUFF_ENCODER_CACHE_MAX:
-        _HUFF_ENCODER_CACHE[key] = enc
-    return enc
+    return {sym: (code, ln) for (ln, code), sym in _huff_canonical(bits, vals).items()}
 
 
 # default quant tables: flat 16 everywhere except DC step 8 — DC steps of 8
@@ -2892,8 +2713,8 @@ def jpeg_encode(
     for i, (hs, vs) in enumerate(samps):
         sof += bytes([i + 1, (hs << 4) | vs, 0])
     seg(0xC0, sof)  # SOF0 baseline
-    seg(0xC4, b"\x00" + bytes(_HUFF_DC_BITS) + bytes(_HUFF_DC_VALS))  # DC table 0
-    seg(0xC4, b"\x10" + bytes(_HUFF_AC_BITS) + bytes(_HUFF_AC_VALS))  # AC table 0
+    seg(0xC4, b"\x00" + _HUFF_DC_BITS + _HUFF_DC_VALS)  # DC table 0
+    seg(0xC4, b"\x10" + _HUFF_AC_BITS + _HUFF_AC_VALS)  # AC table 0
     if restart:
         seg(0xDD, restart.to_bytes(2, "big"))
     sos = bytes([ncomp])
@@ -2988,8 +2809,8 @@ def jpeg_encode_progressive(
     for i, (hs, vs) in enumerate(samps):
         sof += bytes([i + 1, (hs << 4) | vs, 0])
     seg(0xC2, sof)  # SOF2 progressive
-    seg(0xC4, b"\x00" + bytes(_HUFF_DC_BITS) + bytes(_HUFF_DC_VALS))
-    seg(0xC4, b"\x10" + bytes(_HUFF_AC_BITS) + bytes(_HUFF_AC_VALS))
+    seg(0xC4, b"\x00" + _HUFF_DC_BITS + _HUFF_DC_VALS)
+    seg(0xC4, b"\x10" + _HUFF_AC_BITS + _HUFF_AC_VALS)
 
     mcw, mch = 8 * hmax, 8 * vmax
     mcus_x = (w + mcw - 1) // mcw
@@ -3269,12 +3090,12 @@ def _parse_dht(seg: bytes, dc_tabs: dict, ac_tabs: dict) -> bool:
     i = 0
     while i + 17 <= len(seg):
         tc, th = seg[i] >> 4, seg[i] & 0x0F
-        bits = list(seg[i + 1 : i + 17])
+        bits = bytes(seg[i + 1 : i + 17])
         cnt = sum(bits)
         i += 17
         if i + cnt > len(seg) or tc > 1 or th > 3:
             return False
-        vals = list(seg[i : i + cnt])
+        vals = bytes(seg[i : i + cnt])
         i += cnt
         (dc_tabs if tc == 0 else ac_tabs)[th] = _huff_tables(bits, vals)
     return i == len(seg)
@@ -6493,25 +6314,6 @@ def _parse_id3v1(data: bytes) -> dict[str, str]:
     return out
 
 
-def id3v1_encode(
-    title: str, artist: str, album: str = "", year: str = "",
-    track: int = 0,
-) -> bytes:
-    """Fixture/writer for the 128-byte ID3v1(.1) trailer."""
-    def pad(s: str, n: int) -> bytes:
-        return s.encode("latin-1")[:n].ljust(n, b"\x00")
-
-    blk = b"TAG" + pad(title, 30) + pad(artist, 30) + pad(album, 30)
-    blk += pad(year, 4)
-    if track:
-        blk += pad("", 28) + b"\x00" + bytes([track])
-    else:
-        blk += pad("", 30)
-    blk += b"\xff"  # genre: none
-    assert len(blk) == 128
-    return blk
-
-
 ADTS_MAX_FRAMES = 8192  # envelope-walk bound for hostile input
 _ADTS_RATES = (96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
                16000, 12000, 11025, 8000, 7350)
@@ -8039,17 +7841,6 @@ def _parse_flac_meta(data: bytes) -> dict[str, str]:
         if last:
             break
     return out
-
-
-def flac_vorbis_comment_block(tags: dict[str, str], last: bool = False) -> bytes:
-    """A VORBIS_COMMENT metadata block (fixture helper for tagged FLACs)."""
-    body = len(b"fa_spark").to_bytes(4, "little") + b"fa_spark"
-    body += len(tags).to_bytes(4, "little")
-    for k, v in tags.items():
-        item = f"{k}={v}".encode()
-        body += len(item).to_bytes(4, "little") + item
-    hdr = bytes([(0x80 if last else 0) | 4]) + len(body).to_bytes(3, "big")
-    return hdr + body
 
 
 # 9c⁴. Video container metadata (round 4 — the mp4/webm analogue of the
@@ -9730,44 +9521,6 @@ def webp_vp8l_encode(
     if len(payload) & 1:
         chunk += b"\x00"
     riff = b"WEBP" + chunk
-    return b"RIFF" + len(riff).to_bytes(4, "little") + riff
-
-
-def webp_vp8x_encode(
-    width: int, height: int, *, vp8l: bytes | None = None,
-    frames: list | None = None, loop_count: int = 0, alpha: int = 0,
-) -> bytes:
-    """VP8X extended-layout fixture (round 8): optionally embeds the
-    VP8L chunk lifted from a standalone webp_vp8l_encode file (a real
-    decodable still inside the extended container) and/or ANIM/ANMF
-    animation chunks with exact millisecond frame durations (frame
-    payloads empty — the animation surface is envelope-level, like
-    mp4's sample tables)."""
-    flags = ((alpha & 1) << 4) | ((1 if frames else 0) << 1)
-    vp8x = (
-        bytes([flags]) + b"\x00\x00\x00"
-        + (width - 1).to_bytes(3, "little")
-        + (height - 1).to_bytes(3, "little")
-    )
-    chunks = b"VP8X" + len(vp8x).to_bytes(4, "little") + vp8x
-    if frames:
-        anim = bytes(4) + (loop_count & 0xFFFF).to_bytes(2, "little")
-        chunks += b"ANIM" + len(anim).to_bytes(4, "little") + anim
-        for dur in frames:
-            body = (
-                bytes(6)
-                + (width - 1).to_bytes(3, "little")
-                + (height - 1).to_bytes(3, "little")
-                + int(dur).to_bytes(3, "little") + b"\x00"
-            )
-            chunks += b"ANMF" + len(body).to_bytes(4, "little") + body
-    if vp8l is not None:
-        i = vp8l.index(b"VP8L")
-        csz = int.from_bytes(vp8l[i + 4 : i + 8], "little")
-        chunks += vp8l[i : i + 8 + csz]
-        if csz & 1:
-            chunks += b"\x00"
-    riff = b"WEBP" + chunks
     return b"RIFF" + len(riff).to_bytes(4, "little") + riff
 
 
@@ -12651,18 +12404,7 @@ STOPWORDS = {
 
 def detect_lang(text: str) -> str:
     """n-gram/stopword-ratio language id over {en,de,fr}; 'und' if no signal."""
-    toks = tokenize(text)
-    if not toks:
-        return "und"
-    sample = toks[:400]
-    best_lang, best_hits = "und", 0
-    for lang in ("en", "de", "fr"):  # fixed iteration order => deterministic ties
-        hits = sum(map(STOPWORDS[lang].__contains__, sample))
-        if hits > best_hits:
-            best_lang, best_hits = lang, hits
-    if best_hits * 20 < len(sample):  # <5% stopwords: no confident signal
-        return "und"
-    return best_lang
+    return _detect_lang_toks(tokenize(text))
 
 
 _ALPHA_RE = re.compile(r"[^\W\d_]")
@@ -12691,16 +12433,17 @@ def token_count(text: str) -> tuple[int, int]:
 # ---------------------------------------------------------------------------
 
 def _detect_lang_toks(toks: list[str]) -> str:
-    """detect_lang on a pre-computed token list (same decision rule)."""
+    """The language rule, on a pre-computed token list (detect_lang is
+    this over tokenize(text))."""
     if not toks:
         return "und"
     sample = toks[:400]
     best_lang, best_hits = "und", 0
-    for lang in ("en", "de", "fr"):
+    for lang in ("en", "de", "fr"):  # fixed iteration order => deterministic ties
         hits = sum(map(STOPWORDS[lang].__contains__, sample))
         if hits > best_hits:
             best_lang, best_hits = lang, hits
-    if best_hits * 20 < len(sample):
+    if best_hits * 20 < len(sample):  # <5% stopwords: no confident signal
         return "und"
     return best_lang
 
@@ -12822,6 +12565,7 @@ def _minhash_windows_batch(
 
 
 def _simhash_toks(toks: list[str]) -> int:
+    """SimHash of a token list (simhash64 is this over tokenize(text))."""
     counts = Counter(toks)
     if not counts:
         return 0
@@ -12874,74 +12618,32 @@ def _simhash_toks_batch(toks_list: list[list[str]]) -> list[int]:
 
 
 def _metadata_from_parse(
-    data: bytes, ct: str, charset: str | None, parser, title: str
+    data: bytes, charset: str, parser, title: str
 ) -> dict[str, str]:
-    """extract_metadata's logic reusing an existing DOM parse (identical
-    output for html/text/xml inputs; binary inputs never reach here)."""
+    """The text branch of extract_metadata (html/text/xml inputs), over
+    the DOM parse the caller already made."""
     out: dict[str, str] = {}
     out.update(_parse_png_meta(data))
     out.update(_parse_jpeg_meta(data))
     out.update(_parse_pdf_meta(data))
-    if ct in ("html", "text", "xml"):
-        out.update(_parse_svg_meta(data))
-        out.update(_parse_caption_meta(data))
-        out.update(_parse_m3u8_meta(data))
-        out["charset"] = charset or ""
-        for k, v in sorted(parser.meta.items()):
-            out[f"meta:{k}"] = v
-        if title:
-            out["title"] = title
-        n_img = 0
-        for _m in _DATA_URI_RE.finditer(data):
-            n_img += 1
-            if n_img >= 8:
-                break
-        if n_img:
-            out["embedded_images"] = str(n_img)
+    out.update(_parse_svg_meta(data))
+    out.update(_parse_caption_meta(data))
+    out.update(_parse_m3u8_meta(data))
+    out["charset"] = charset
+    for k, v in sorted(parser.meta.items()):
+        out[f"meta:{k}"] = v
+    if title:
+        out["title"] = title
+    # data-URI embedded images (fixture case: EXIF inside HTML)
+    n_img = 0
+    for _m in _DATA_URI_RE.finditer(data):
+        n_img += 1
+        if n_img >= 8:
+            break
+    if n_img:
+        out["embedded_images"] = str(n_img)
     out["bytes"] = str(len(data))
     return out
-
-
-def _extract_with_ctx(b: bytes):
-    """Decode+DOM+extract step that every analyze_document call runs:
-    returns (sniff, ExtractResult, html_ctx) where html_ctx is
-    (ct, charset, parser) for html/text/xml inputs (what
-    _metadata_from_parse needs) and None otherwise."""
-    sn = sniff_bytes(b)
-    ct = sn["content_type"]
-
-    if ct in ("html", "text", "xml"):
-        html_str, cs = decode_bytes(b)
-        blocks, parser = extract_blocks(html_str)
-        title = _norm_ws("".join(parser.title_parts))
-        doc_type = classify_doc_type(blocks, parser, ct)
-        content = [
-            blk["text"] for blk in blocks if blk["is_content"] and blk["tag"] != "title"
-        ]
-        if content:
-            body = [
-                blk["text"]
-                for blk in blocks
-                if blk["is_content"] and blk["tag"] not in _HEADING_TAGS
-            ]
-            desc = (body[0] if body else content[0])[:DESCRIPTION_LEN]
-            ex = ExtractResult(
-                "\n\n".join(content), doc_type, "success", 1, title, desc
-            )
-        else:
-            stripped = _lenient_strip(html_str)
-            if stripped:
-                ex = ExtractResult(
-                    stripped, doc_type, "success_lenient", 2, title,
-                    stripped[:DESCRIPTION_LEN],
-                )
-            else:
-                ex = ExtractResult("", doc_type, "empty", 3, title)
-        return sn, ex, (ct, cs, parser)
-    if ct == "pdf":
-        # route directly (extract_main_text would re-sniff the magic bytes)
-        return sn, extract_pdf_text(b), None
-    return sn, extract_main_text(b), None
 
 
 def analyze_document(
@@ -12950,8 +12652,9 @@ def analyze_document(
 ) -> dict:
     """ONE pass per document: decode once, parse the DOM once, tokenize the
     extracted text once; every analyzer consumes the shared intermediates.
-    Field-for-field identical to calling the individual functions (pinned by
-    tests/test_pure.py::test_fused_equals_individual).
+    extract_main_text, extract_metadata, detect_lang, simhash64 and
+    minhash_signature are views of these same steps, so each field equals
+    the individual function's result by construction.
 
     ``fields``: the analysis fields (``stages.analyze.FIELDS`` names) the
     caller reads, None for all. Sniff and extract always run; every later
@@ -12975,8 +12678,7 @@ def analyze_document(
     d: dict = {"sniff": sn, "extract": ex}
     if needs("meta"):
         if html_ctx is not None:
-            ct, cs, parser = html_ctx
-            d["meta"] = _metadata_from_parse(b, ct, cs, parser, ex.title)
+            d["meta"] = _metadata_from_parse(b, *html_ctx, ex.title)
         else:
             d["meta"] = extract_metadata(b)
 

@@ -52,12 +52,6 @@ def render_analysis(row: dict[str, Any], fmt: str = "md") -> str:
     raise ValueError(f"unknown format: {fmt}")
 
 
-def render_sample(df, k: int = 5, fmt: str = "md") -> list[str]:
-    """Render the first k rows (by url — deterministic) of an analysis df."""
-    rows = df.orderBy("url").limit(k).collect()
-    return [render_analysis(r.asDict(recursive=True), fmt) for r in rows]
-
-
 def write_text_reports(df, path: str, fmt: str = "md") -> None:
     """Distributed text-report sink (reference S6 — raw per-file .txt via
     safe_write, analyzer.py:497/607/689). Spark-first shape: every analysis
@@ -65,8 +59,8 @@ def write_text_reports(df, path: str, fmt: str = "md") -> None:
     escaped as literal '\\n'), written partition-parallel; the atomic
     temp+rename the reference hand-rolls in safe_write is what Spark's
     job-commit protocol already provides. Rendering runs in an Arrow batch
-    (mapInPandas over render_analysis — the same pure function the driver-
-    side sample renderer uses, so the two sinks can't drift)."""
+    (mapInPandas over render_analysis — the same pure function that renders
+    collected rows, so the two can't drift)."""
     from pyspark.sql import types as T
 
     cols = df.columns
@@ -101,26 +95,6 @@ def write_text_reports(df, path: str, fmt: str = "md") -> None:
 
     reports = df.mapInPandas(fn, T.StructType([T.StructField("value", T.StringType())]))
     reports.write.mode("overwrite").text(path)
-
-
-def read_text_reports(spark, path: str) -> list[str]:
-    """Read back and unescape reports written by write_text_reports."""
-    rows = spark.read.text(path).collect()
-    out = []
-    for r in rows:
-        s = r["value"]
-        # unescape in one pass (escaped backslash must not re-trigger \n)
-        buf = []
-        i = 0
-        while i < len(s):
-            if s[i] == "\\" and i + 1 < len(s):
-                buf.append("\n" if s[i + 1] == "n" else s[i + 1])
-                i += 2
-            else:
-                buf.append(s[i])
-                i += 1
-        out.append("".join(buf))
-    return out
 
 
 def preflight(spark) -> dict[str, str]:

@@ -53,22 +53,19 @@ def _sniff_col(docs: list[dict]) -> list:
     ]
 
 
-def _simhash_col(docs: list[dict]) -> list:
+def _simhashes(toks_list: list[list[str]]) -> list:
     # computed for the whole batch in one reduceat pass
     # (pure._simhash_toks_batch) — bit-identical, ~4x cheaper than
     # per-doc numpy setup
-    toks = [d["toks"] if d["extract"].text else [] for d in docs]
-    return [_to_i64(s) for s in pure._simhash_toks_batch(toks)]
+    return [_to_i64(s) for s in pure._simhash_toks_batch(toks_list)]
 
 
-def _minhash_col(docs: list[dict]) -> list:
+def _minhashes(windows_list: list) -> list:
     # like simhash, one reduceat pass for the whole batch
     # (pure._minhash_windows_batch, round 7 — bit-identical, drops the
-    # per-doc (seeds, windows) broadcast setup); empty-text docs keep the
-    # per-doc form's [] signature
-    sigs = pure._minhash_windows_batch(
-        [d["mh_windows"] for d in docs], MINHASH_K, signed=True
-    )
+    # per-doc (seeds, windows) broadcast setup); docs without text (None
+    # windows) get the [] signature
+    sigs = pure._minhash_windows_batch(windows_list, MINHASH_K, signed=True)
     return [[] if sig is None else sig for sig in sigs]
 
 
@@ -86,8 +83,8 @@ _COLUMNS = {
         pure.scan_text(t, _COMPILED_SIGS) if (t := d["extract"].text) else []
         for d in docs
     ],
-    "simhash": _simhash_col,
-    "minhash": _minhash_col,
+    "simhash": lambda docs: _simhashes([d["toks"] for d in docs]),
+    "minhash": lambda docs: _minhashes([d["mh_windows"] for d in docs]),
     "quality": _key("quality"),
     "detected_lang": _key("detected_lang"),
     "n_tokens_ws": lambda docs: [d["token_count"][0] for d in docs],
@@ -106,9 +103,12 @@ def analyze_batch(html: pd.Series, fields: tuple[str, ...] = FIELDS) -> pd.DataF
     """One Arrow batch of raw page bytes -> the requested analysis columns.
 
     Delegates to pure.analyze_document — ONE decode + ONE DOM parse + ONE
-    tokenization per page shared by all analyzers (field-for-field identical
-    to the individual pure functions; the two-parse/four-tokenize version
-    measured ~40% slower), running only the steps ``fields`` need."""
+    tokenization per page shared by all analyzers (the two-parse/four-
+    tokenize version measured ~40% slower), running only the steps
+    ``fields`` need. Each field equals the individual pure function's
+    result by construction: those functions are views of the same steps,
+    and the simhash/minhash columns share _simhashes/_minhashes with
+    simhash_udf/minhash_udf."""
     docs = [
         pure.analyze_document(
             bytes(data) if data is not None else b"",
@@ -143,23 +143,14 @@ def analysis_udf(fields=FIELDS):
 
 
 def _minhash_batch(text: pd.Series) -> pd.Series:
-    # one flat reduceat pass for the whole Arrow batch (round 7) —
-    # bit-identical to per-doc minhash_signature: the per-seed min is
-    # invariant to the dedup _shingle_ids would do
     windows = [
-        pure._shingle_windows(pure.tokenize(t), 5) if t else None
-        for t in text
+        pure._shingle_windows(pure.tokenize(t), 5) if t else None for t in text
     ]
-    return pd.Series(
-        [
-            [] if sig is None else sig
-            for sig in pure._minhash_windows_batch(windows, signed=True)
-        ]
-    )
+    return pd.Series(_minhashes(windows))
 
 
 def _simhash_batch(text: pd.Series) -> pd.Series:
-    return pd.Series([_to_i64(pure.simhash64(t)) if t else 0 for t in text])
+    return pd.Series(_simhashes([pure.tokenize(t) if t else [] for t in text]))
 
 
 FP_FULL_MAX_TOKENS = 8192  # docs past this are excluded (symmetric in SQL)

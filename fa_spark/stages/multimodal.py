@@ -418,13 +418,14 @@ def _quadrant_objects(img: dict) -> list[dict]:
     return out
 
 
-def detect_objects(
-    df: DataFrame, id_col: str = "media_id", content_col: str = "content"
+def _raster_stage(
+    df: DataFrame, id_col: str, content_col: str, schema: T.StructType, per_image
 ) -> DataFrame:
-    """Detect-mode typed output (reference M7 objects[]): df(media_id,
-    content binary) -> OBJECTS rows with an ArrayType(StructType) objects
-    column. Same decode taxonomy as extract_media_features; objects is NULL
-    unless a real decode succeeded."""
+    """df(media_id, content binary) -> ``schema`` rows (media_id,
+    content_type, decode_status, <value>): each blob is sniffed, rasters are
+    decoded with this repo's own codecs, and the value column is
+    ``per_image(decoded image)`` — NULL unless a real decode succeeded.
+    Same decode taxonomy as extract_media_features."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -432,29 +433,31 @@ def detect_objects(
             for mid, data in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(data) if data is not None else b""
                 ct = pure.sniff_bytes(b)["content_type"]
-                status, objects = "skipped", None
+                status, value = "skipped", None
                 if ct in _RASTER_DECODERS:
                     img = _decode_raster(ct, b)
                     if img is not None:
-                        status = "decoded"
-                        objects = _quadrant_objects(img)
+                        status, value = "decoded", per_image(img)
                     else:
                         status = "decode_error"
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content_type": ct,
-                        "decode_status": status,
-                        "objects": objects,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in OBJECTS.fields])
+                rows.append((mid, ct, status, value))
+            yield pd.DataFrame(rows, columns=schema.names)
 
     src = df.select(
         F.col(id_col).cast("string").alias("media_id"),
         F.col(content_col).alias("content"),
     )
-    return src.mapInPandas(fn, OBJECTS)
+    return src.mapInPandas(fn, schema)
+
+
+def detect_objects(
+    df: DataFrame, id_col: str = "media_id", content_col: str = "content"
+) -> DataFrame:
+    """Detect-mode typed output (reference M7 objects[]): df(media_id,
+    content binary) -> OBJECTS rows with an ArrayType(StructType) objects
+    column. Same decode taxonomy as extract_media_features; objects is NULL
+    unless a real decode succeeded."""
+    return _raster_stage(df, id_col, content_col, OBJECTS, _quadrant_objects)
 
 
 OCR = T.StructType(
@@ -467,6 +470,15 @@ OCR = T.StructType(
 )
 
 
+def _ocr_text(img: dict) -> str | None:
+    # soft sub-cell matcher (round 5): reads anti-aliased rasters; equal
+    # to the exact path on clean binary input. pitch='auto' (round 6):
+    # also tries variable-pitch ink-gap segmentation (pure._ocr_match_prop)
+    # and keeps whichever reading has the higher normalized confidence —
+    # proportional-font renders read too
+    return pure.ocr_image(img, soft=True, pitch="auto")
+
+
 def ocr_media(
     df: DataFrame, id_col: str = "media_id", content_col: str = "content"
 ) -> DataFrame:
@@ -475,43 +487,7 @@ def ocr_media(
     glyph text (pure.ocr_image; scope documented there). Same taxonomy as
     the other media stages; ocr_text is NULL unless a real decode succeeds
     and the image holds at least one glyph row."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(data) if data is not None else b""
-                ct = pure.sniff_bytes(b)["content_type"]
-                status, text = "skipped", None
-                if ct in _RASTER_DECODERS:
-                    img = _decode_raster(ct, b)
-                    if img is not None:
-                        status = "decoded"
-                        # soft sub-cell matcher (round 5): reads
-                        # anti-aliased rasters; equal to the exact path
-                        # on clean binary input. pitch='auto' (round 6):
-                        # also tries variable-pitch ink-gap segmentation
-                        # (pure._ocr_match_prop) and keeps whichever
-                        # reading has the higher normalized confidence —
-                        # proportional-font renders read too
-                        text = pure.ocr_image(img, soft=True, pitch="auto")
-                    else:
-                        status = "decode_error"
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content_type": ct,
-                        "decode_status": status,
-                        "ocr_text": text,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in OCR.fields])
-
-    src = df.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.col(content_col).alias("content"),
-    )
-    return src.mapInPandas(fn, OCR)
+    return _raster_stage(df, id_col, content_col, OCR, _ocr_text)
 
 
 def extract_media_features(

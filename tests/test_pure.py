@@ -4,6 +4,10 @@ FIXTURES.md §3 (reference sources cited there)."""
 
 from __future__ import annotations
 
+import struct
+import zlib
+
+import numpy as np
 import pytest
 
 from fa_spark import pure
@@ -116,17 +120,13 @@ def test_json_nested():
 
 
 def test_json_plain_text_refusal():
-    out = pure.process_model_output("I cannot analyze this image.")
-    assert out["metadata"]["json_parsing_failed"] is True
-    assert out["description"].startswith("I cannot")
+    assert pure.extract_json_from_text("I cannot analyze this image.") is None
 
 
 def test_json_truncated_repetitive():
     # 512-token truncation analogue: repeated tags then cut mid-string
     txt = '{"description": "a shark", "tags": ["shark", "shark", "shark", "sha'
-    out = pure.process_model_output(txt)
-    assert isinstance(out, dict)
-    assert "description" in out
+    assert pure.extract_json_from_text(txt) is None
 
 
 def test_validate_structure_modes():
@@ -261,11 +261,6 @@ def test_scan_signatures():
     assert pure.scan_text("clean text", compiled) == []
 
 
-def test_count_matches():
-    assert pure.count_matches("Spark spark SPARK", "spark") == 3
-    assert pure.count_matches("Spark spark", "spark", ignore_case=False) == 1
-
-
 # ---- fingerprints ----
 
 def test_minhash_similarity_ordering():
@@ -281,9 +276,9 @@ def test_minhash_similarity_ordering():
 def test_simhash_close_for_near_dup():
     a = "the quick brown fox jumps over the lazy dog " * 10
     b = a + " one extra"
-    assert pure.hamming64(pure.simhash64(a), pure.simhash64(b)) <= 3
+    assert (pure.simhash64(a) ^ pure.simhash64(b)).bit_count() <= 3
     c = "unrelated words entirely about spark partitions " * 10
-    assert pure.hamming64(pure.simhash64(a), pure.simhash64(c)) > 10
+    assert (pure.simhash64(a) ^ pure.simhash64(c)).bit_count() > 10
 
 
 def test_fingerprint_deterministic():
@@ -587,17 +582,26 @@ def test_metadata_dims_all_raster_formats():
             pure.extract_metadata(blob[:cut])
 
 
+def _shingle_ids(toks: list[str], k: int) -> list[int]:
+    """The deduplicated shingle ids of a token list, first-seen order: the
+    id form the raw-window minhash path must agree with."""
+    ids = pure._shingle_windows(toks, k)
+    if ids.size == 0:
+        return []
+    _, first = np.unique(ids, return_index=True)
+    first.sort()
+    return [int(ids[i]) for i in first]
+
+
 def test_shingles_k_above_coefficient_table():
     """Round-3 ADVICE: the 32-entry positional-coefficient table must grow
     on demand — k=33+ used to raise a numpy broadcast ValueError."""
-    toks = " ".join(f"w{i}" for i in range(40))
-    out = pure.shingles(toks, k=33)
+    toks = [f"w{i}" for i in range(40)]
+    out = _shingle_ids(toks, 33)
     assert len(out) == 40 - 33 + 1
-    assert out == pure.shingles(toks, k=33)  # deterministic
+    assert out == _shingle_ids(toks, 33)  # deterministic
     # windows at k>32 still distinguish position
-    assert pure.shingles(toks, k=33) != pure.shingles(
-        " ".join(reversed(toks.split())), k=33
-    )
+    assert _shingle_ids(toks, 33) != _shingle_ids(toks[::-1], 33)
 
 
 def test_simhash_batch_matches_per_doc():
@@ -624,7 +628,7 @@ def test_minhash_raw_windows_match_deduped_ids():
     for _ in range(60):
         toks = [f"w{rng.randrange(12)}" for _ in range(rng.randrange(0, 80))]
         raw = pure._minhash_shingles(pure._shingle_windows(toks, 5))
-        ded = pure._minhash_shingles(pure._shingle_ids(toks, 5))
+        ded = pure._minhash_shingles(_shingle_ids(toks, 5))
         assert raw == ded
 
 
@@ -781,13 +785,24 @@ def test_wasm_and_tar_meta_surface():
             pure.extract_metadata(blob[:cut])
 
 
+def _flac_vorbis_comment_block(tags: dict[str, str], last: bool = False) -> bytes:
+    """A VORBIS_COMMENT metadata block (fixture helper for tagged FLACs)."""
+    body = len(b"fa_spark").to_bytes(4, "little") + b"fa_spark"
+    body += len(tags).to_bytes(4, "little")
+    for k, v in tags.items():
+        item = f"{k}={v}".encode()
+        body += len(item).to_bytes(4, "little") + item
+    hdr = bytes([(0x80 if last else 0) | 4]) + len(body).to_bytes(3, "big")
+    return hdr + body
+
+
 def test_flac_tags_and_streaminfo_meta():
     base = bytearray(pure.flac_encode([9] * 1600, 16000))
     base[4] &= 0x7F  # STREAMINFO no longer the last metadata block
     si_len = int.from_bytes(base[5:8], "big")
     at = 8 + si_len
-    vc = pure.flac_vorbis_comment_block({"title": "Tïtle", "album": "X"},
-                                        last=True)
+    vc = _flac_vorbis_comment_block({"title": "Tïtle", "album": "X"},
+                                    last=True)
     tagged = bytes(base[:at]) + vc + bytes(base[at:])
     m = pure.extract_metadata(tagged)
     assert m["flac:duration_s"] == "0.100"
@@ -1169,6 +1184,66 @@ def test_mp4_mjpeg_roundtrip_and_hostility():
 
 # ---- PNG general decode path (round 5): palette / sub-byte / Adam7 ----
 
+def _png_pack_row(vals: list, depth: int) -> bytes:
+    """Pack single-sample values at ``depth`` bits, MSB-first."""
+    if depth == 8:
+        return bytes(vals)
+    per_byte = 8 // depth
+    out = bytearray((len(vals) + per_byte - 1) // per_byte)
+    for i, v in enumerate(vals):
+        shift = 8 - depth * (i % per_byte + 1)
+        out[i // per_byte] |= (v & ((1 << depth) - 1)) << shift
+    return bytes(out)
+
+
+def _png_encode_palette(
+    index_rows: list, palette: list, depth: int = 8, interlace: bool = False
+) -> bytes:
+    """Palette (color type 3) PNG writer — fixtures for the round-5
+    general decode path: PLTE + index scanlines at 1/2/4/8 bits
+    MSB-first, optional Adam7 interlace, filter 0 rows."""
+    if depth not in (1, 2, 4, 8):
+        raise ValueError("palette depth must be 1/2/4/8")
+    h = len(index_rows)
+    w = len(index_rows[0]) if h else 0
+    plte = b"".join(bytes(c) for c in palette)
+    passes = pure._PNG_ADAM7 if interlace else ((0, 0, 1, 1),)
+    raw = bytearray()
+    for xs, ys, xstep, ystep in passes:
+        for y in range(ys, h, ystep):
+            vals = [index_rows[y][x] for x in range(xs, w, xstep)]
+            if vals:
+                raw += b"\x00" + _png_pack_row(vals, depth)
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 1 if interlace else 0)
+    return (
+        pure._PNG_SIG
+        + pure._png_chunk(b"IHDR", ihdr)
+        + pure._png_chunk(b"PLTE", plte)
+        + pure._png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + pure._png_chunk(b"IEND", b"")
+    )
+
+
+def _png_encode_interlaced(rows: list) -> bytes:
+    """Adam7-interlaced RGB8 PNG writer (fixtures): the 7 passes'
+    filter-0 scanlines in spec order."""
+    h = len(rows)
+    w = len(rows[0]) if h else 0
+    raw = bytearray()
+    for xs, ys, xstep, ystep in pure._PNG_ADAM7:
+        for y in range(ys, h, ystep):
+            cells = [rows[y][x] for x in range(xs, w, xstep)]
+            if cells:
+                raw += b"\x00" + bytes(v for px in cells for v in px)
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)
+    return (
+        pure._PNG_SIG
+        + pure._png_chunk(b"IHDR", ihdr)
+        + pure._png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + pure._png_chunk(b"IEND", b"")
+    )
+
+
 def test_png_palette_roundtrip_all_depths():
     """Palette PNGs (the most common PNG form on the web) decode through
     PLTE to exact RGB at every legal index depth, plain and Adam7."""
@@ -1178,7 +1253,7 @@ def test_png_palette_roundtrip_all_depths():
         rows = [[(x + y) % k for x in range(9)] for y in range(7)]
         for inter in (False, True):
             d = pure.decode_png(
-                pure.png_encode_palette(rows, pal, depth=depth, interlace=inter)
+                _png_encode_palette(rows, pal, depth=depth, interlace=inter)
             )
             assert d is not None and d["channels"] == 3, (depth, inter)
             for y in range(7):
@@ -1192,7 +1267,7 @@ def test_png_adam7_rgb_roundtrip():
         [(x * 10 % 256, y * 20 % 256, (x + y) % 256) for x in range(11)]
         for y in range(6)
     ]
-    d = pure.decode_png(pure.png_encode_interlaced(rgb))
+    d = pure.decode_png(_png_encode_interlaced(rgb))
     assert d is not None and d["channels"] == 3
     for y in range(6):
         for x in range(11):
@@ -1213,7 +1288,7 @@ def test_png_gray_subbyte_and_hostility():
             for y in range(ys, h, yst):
                 v = [vals_rows[y][x] for x in range(xs, w, xst)]
                 if v:
-                    raw += b"\x00" + pure._png_pack_row(v, depth)
+                    raw += b"\x00" + _png_pack_row(v, depth)
         ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, inter)
         return (
             pure._PNG_SIG + pure._png_chunk(b"IHDR", ihdr)
@@ -1229,7 +1304,7 @@ def test_png_gray_subbyte_and_hostility():
     d2 = pure.decode_png(gray_png(g, 4, inter=1))
     assert bytes(d2["pixels"]) == bytes(d["pixels"])  # interlace-invariant
 
-    png = pure.png_encode_palette(
+    png = _png_encode_palette(
         [[(x + y) % 4 for x in range(9)] for y in range(7)],
         [(255, 0, 0), (0, 255, 0), (0, 0, 255), (9, 9, 9)],
         depth=4, interlace=True,
@@ -1245,7 +1320,7 @@ def test_png_gray_subbyte_and_hostility():
         assert r is None or isinstance(r, dict)
     # out-of-range palette index refuses (strict per spec)
     assert pure.decode_png(
-        pure.png_encode_palette([[5]], [(1, 2, 3)], depth=8)
+        _png_encode_palette([[5]], [(1, 2, 3)], depth=8)
     ) is None
 
 
@@ -1300,7 +1375,7 @@ def test_media_stage_fuzz_round5_decoders(spark):
         pure.vorbis_tone_encode(3, 0.5, 6),
         pure.avi_mjpeg_encode([pure.jpeg_encode([[(90,) * 3] * 16] * 16)]),
         pure.mp4_mjpeg_encode([pure.jpeg_encode([[(91,) * 3] * 16] * 16)]),
-        pure.png_encode_palette(
+        _png_encode_palette(
             [[x % 4 for x in range(8)]] * 8,
             [(1, 2, 3), (4, 5, 6), (7, 8, 9), (10, 11, 12)],
             depth=4, interlace=True,
@@ -1674,6 +1749,25 @@ def test_minhash_batch_equals_per_doc(monkeypatch):
             assert sig == pure._minhash_shingles(w)
 
 
+def _id3v1_encode(
+    title: str, artist: str, album: str = "", year: str = "",
+    track: int = 0,
+) -> bytes:
+    """Fixture/writer for the 128-byte ID3v1(.1) trailer."""
+    def pad(s: str, n: int) -> bytes:
+        return s.encode("latin-1")[:n].ljust(n, b"\x00")
+
+    blk = b"TAG" + pad(title, 30) + pad(artist, 30) + pad(album, 30)
+    blk += pad(year, 4)
+    if track:
+        blk += pad("", 28) + b"\x00" + bytes([track])
+    else:
+        blk += pad("", 30)
+    blk += b"\xff"  # genre: none
+    assert len(blk) == 128
+    return blk
+
+
 def test_mp3_xing_and_id3v1_envelope():
     """Round 7: Xing/Info VBR header + ID3v1 trailer join the mp3
     envelope surface."""
@@ -1694,8 +1788,8 @@ def test_mp3_xing_and_id3v1_envelope():
     # no header -> no keys
     assert "mp3:xing" not in pure._parse_mp3_meta(base)
     # ID3v1(.1) trailer
-    tagged = base + pure.id3v1_encode("My Song", "An Artist", "Album",
-                                      "1999", track=7)
+    tagged = base + _id3v1_encode("My Song", "An Artist", "Album",
+                                  "1999", track=7)
     m = pure._parse_mp3_meta(tagged)
     assert m["id3v1:title"] == "My Song"
     assert m["id3v1:artist"] == "An Artist"
@@ -1710,7 +1804,7 @@ def test_mp3_xing_id3v1_hostile():
     import random
 
     rnd = random.Random(77)
-    base = pure.mp3_tone_encode(2, 1) + pure.id3v1_encode("t", "a")
+    base = pure.mp3_tone_encode(2, 1) + _id3v1_encode("t", "a")
     for _ in range(300):
         b = bytearray(base)
         for _ in range(5):

@@ -2,7 +2,34 @@ from __future__ import annotations
 
 import json
 
-from fa_spark.render import preflight, render_analysis, render_sample
+from fa_spark.render import preflight, render_analysis
+
+
+def render_sample(df, k: int = 5, fmt: str = "md") -> list[str]:
+    """Render the first k rows (by url — deterministic) of an analysis df."""
+    rows = df.orderBy("url").limit(k).collect()
+    return [render_analysis(r.asDict(recursive=True), fmt) for r in rows]
+
+
+def read_text_reports(spark, path: str) -> list[str]:
+    """Read back and unescape reports written by write_text_reports."""
+    rows = spark.read.text(path).collect()
+    out = []
+    for r in rows:
+        s = r["value"]
+        # unescape in one pass (escaped backslash must not re-trigger \n)
+        buf = []
+        i = 0
+        while i < len(s):
+            if s[i] == "\\" and i + 1 < len(s):
+                buf.append("\n" if s[i + 1] == "n" else s[i + 1])
+                i += 2
+            else:
+                buf.append(s[i])
+                i += 1
+        out.append("".join(buf))
+    return out
+
 
 ROW = {
     "url": "https://host1.example/a/1.html",
@@ -55,7 +82,7 @@ def test_text_report_sink_roundtrip(spark, tmp_path):
     """S6 (round 3): the distributed text sink writes one escaped report
     line per row; reading back reproduces the driver-side renderer byte for
     byte (same pure function both paths)."""
-    from fa_spark.render import read_text_reports, render_analysis, write_text_reports
+    from fa_spark.render import write_text_reports
 
     rows = [
         {
@@ -91,7 +118,7 @@ def test_text_report_sink_null_fields_match_driver_renderer(spark, tmp_path):
     """Round-3 ADVICE: pandas hands the batch renderer NaN/NaT/numpy
     scalars where Row.asDict() yields None/Python values; rows with null
     fields must still render byte-identically across both sinks."""
-    from fa_spark.render import read_text_reports, render_analysis, write_text_reports
+    from fa_spark.render import write_text_reports
 
     rows = [
         {"url": "https://n/0", "slug": None, "tags": None, "n_chars": None,

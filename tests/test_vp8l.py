@@ -21,6 +21,44 @@ def _grad(w: int, h: int, did: int = 7) -> list:
     ]
 
 
+def _webp_vp8x_encode(
+    width: int, height: int, *, vp8l: bytes | None = None,
+    frames: list | None = None, loop_count: int = 0, alpha: int = 0,
+) -> bytes:
+    """VP8X extended-layout fixture (round 8): optionally embeds the
+    VP8L chunk lifted from a standalone webp_vp8l_encode file (a real
+    decodable still inside the extended container) and/or ANIM/ANMF
+    animation chunks with exact millisecond frame durations (frame
+    payloads empty — the animation surface is envelope-level, like
+    mp4's sample tables)."""
+    flags = ((alpha & 1) << 4) | ((1 if frames else 0) << 1)
+    vp8x = (
+        bytes([flags]) + b"\x00\x00\x00"
+        + (width - 1).to_bytes(3, "little")
+        + (height - 1).to_bytes(3, "little")
+    )
+    chunks = b"VP8X" + len(vp8x).to_bytes(4, "little") + vp8x
+    if frames:
+        anim = bytes(4) + (loop_count & 0xFFFF).to_bytes(2, "little")
+        chunks += b"ANIM" + len(anim).to_bytes(4, "little") + anim
+        for dur in frames:
+            body = (
+                bytes(6)
+                + (width - 1).to_bytes(3, "little")
+                + (height - 1).to_bytes(3, "little")
+                + int(dur).to_bytes(3, "little") + b"\x00"
+            )
+            chunks += b"ANMF" + len(body).to_bytes(4, "little") + body
+    if vp8l is not None:
+        i = vp8l.index(b"VP8L")
+        csz = int.from_bytes(vp8l[i + 4 : i + 8], "little")
+        chunks += vp8l[i : i + 8 + csz]
+        if csz & 1:
+            chunks += b"\x00"
+    riff = b"WEBP" + chunks
+    return b"RIFF" + len(riff).to_bytes(4, "little") + riff
+
+
 def _check(rows, blob, channels=3, tag=""):
     img = pure.decode_webp_lossless(blob)
     assert img is not None, tag
@@ -208,14 +246,14 @@ def test_vp8x_container_walk_and_embedded_vp8l():
     rows = _grad(10, 6, did=4)
     still = pure.webp_vp8l_encode(rows, subtract_green=True)
     # VP8X wrapping a real VP8L still: meta flags it, decoder decodes it
-    wrapped = pure.webp_vp8x_encode(10, 6, vp8l=still)
+    wrapped = _webp_vp8x_encode(10, 6, vp8l=still)
     m = pure.extract_metadata(wrapped)
     assert m["webp:format"] == "extended" and m["webp:has_vp8l"] == "1"
     img = pure.decode_webp_lossless(wrapped)
     assert img is not None and (img["width"], img["height"]) == (10, 6)
     assert img["pixels"] == pure.decode_webp_lossless(still)["pixels"]
     # animation: exact frame count, loop count, summed duration
-    anim = pure.webp_vp8x_encode(32, 24, frames=[40, 40, 120], loop_count=3)
+    anim = _webp_vp8x_encode(32, 24, frames=[40, 40, 120], loop_count=3)
     ma = pure.extract_metadata(anim)
     assert ma["webp:animation"] == "1" and ma["webp:n_frames"] == "3"
     assert ma["webp:loop_count"] == "3"
@@ -231,7 +269,7 @@ def test_vp8x_embedded_still_decodes_through_stage(spark):
     from fa_spark.stages.multimodal import extract_media_features
 
     rows = _grad(16, 16, did=11)
-    wrapped = pure.webp_vp8x_encode(
+    wrapped = _webp_vp8x_encode(
         16, 16, vp8l=pure.webp_vp8l_encode(rows)
     )
     df = spark.createDataFrame([("x1", wrapped)],
