@@ -258,67 +258,12 @@ def commit_lineage(
     analysis.select("url", "sha", F.lit(run_id).alias("run_id")).write.mode(
         "append"
     ).partitionBy("run_id").parquet(_processed_path(base))
-    from fa_spark.stages.multimodal import STUB_CONTAINER_TYPES
+    from fa_spark.stages.multimodal import stub_type
 
-    # stub accounting (round 5, VERDICT r4 #6): rows the multimodal tier
-    # would mark decode_status=stubbed — recognized container, no pure-
-    # Python codec. riff counts only for non-WAVE forms (WAVE decodes for
-    # real); extract_metadata surfaces the form type as meta['riff:format'].
-    ct = F.col("sniff.content_type")
-    # riff is non-stub for WAVE (decode_wav) and for Motion-JPEG AVI
-    # (decode_avi_mjpeg, round 5) — both decode for real
-    non_stub_riff = (ct == "riff") & (
-        (F.coalesce(F.col("meta").getItem("riff:format"), F.lit("")) == "WAVE")
-        | F.upper(
-            F.trim(F.coalesce(F.col("meta").getItem("avi:codec"), F.lit("")))
-        ).isin("MJPG", "MJPEG")
-    )
-    # ogg is stubbed only for non-Vorbis codecs — Vorbis payloads decode
-    # for real (round 5, pure.decode_vorbis); the codec id comes from the
-    # envelope walk (meta['ogg:codec'])
-    non_stub_ogg = (ct == "ogg") & (
-        F.coalesce(F.col("meta").getItem("ogg:codec"), F.lit("")) == "vorbis"
-    )
-    # mp4 is non-stub when ANY trak carries an MJPEG sample entry
-    # (round 5, decode_mp4_mjpeg; mp4:codecs lists every trak's fourcc)
-    non_stub_mp4 = (ct == "mp4") & F.arrays_overlap(
-        F.split(
-            F.coalesce(F.col("meta").getItem("mp4:codecs"), F.lit("")), ","
-        ),
-        F.array(F.lit("jpeg"), F.lit("mjpa")),
-    )
-    # mp3 is non-stub when every frame sits inside decode_mp3's documented
-    # subset (round 6, pure.decode_mp3; the envelope walk publishes the
-    # side-info verdict as meta['mp3:l3_subset'] so this stays in sync
-    # with the stage's decode gate without re-decoding here)
-    non_stub_mp3 = (ct == "mp3") & (
-        F.coalesce(F.col("meta").getItem("mp3:l3_subset"), F.lit("")) == "1"
-    )
-    # mpeg (MPEG-1 video elementary stream) is non-stub when the envelope
-    # walk verdicts the stream inside decode_mpeg1's I+P subset
-    # (round 6, meta['mpeg:ip_subset'] — same shared-gate pattern; B/D
-    # pictures keep the stream stubbed)
-    non_stub_mpeg = (ct == "mpeg") & (
-        F.coalesce(F.col("meta").getItem("mpeg:ip_subset"), F.lit("")) == "1"
-    )
-    # webp is non-stub for lossless (VP8L) payloads — real decode as of
-    # round 8 (pure.decode_webp_lossless); lossy/extended stay stubbed
-    non_stub_webp = (ct == "webp") & (
-        (
-            F.coalesce(F.col("meta").getItem("webp:format"), F.lit(""))
-            == "lossless"
-        )
-        | (
-            F.coalesce(F.col("meta").getItem("webp:has_vp8l"), F.lit(""))
-            == "1"
-        )
-    )
-    stub_ct = F.when(
-        ct.isin(*STUB_CONTAINER_TYPES)
-        & ~non_stub_riff & ~non_stub_ogg & ~non_stub_mp4 & ~non_stub_mp3
-        & ~non_stub_mpeg & ~non_stub_webp,
-        ct,
-    )
+    # stub accounting: rows the media feature stage would mark
+    # decode_status=stubbed (recognized container, no codec taking it),
+    # by the expression generated from its decode table
+    stub_ct = stub_type(F.col("sniff.content_type"), F.col("meta"))
     # two-level agg: (bucket, stub type) partial-aggregates map-side, then
     # the tiny per-bucket rollup folds the breakdown into one map column —
     # no collect_list over raw rows, scale-safe at any bucket size

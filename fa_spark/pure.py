@@ -1057,9 +1057,8 @@ def extract_metadata(data: bytes | None) -> dict[str, str]:
     out.update(_parse_gzip_meta(data))
     out.update(_parse_zstd_meta(data))
     if ct == "riff" and len(data) >= 12:
-        # RIFF form type (WAVE / AVI / ...) — lets downstream consumers
-        # (e.g. lineage stub accounting) split decodable WAVE from the
-        # stubbed non-WAVE RIFF family without re-reading the bytes
+        # RIFF form type (WAVE / AVI / ...) — gates the WAVE row of
+        # stages/multimodal.DECODE_TABLE without re-reading the bytes
         out["riff:format"] = data[8:12].decode("latin-1").strip("\x00 ")
     out["bytes"] = str(len(data))
     return out
@@ -1242,14 +1241,8 @@ def page_slug(title: str, text: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# 8. JSON extraction / validation (reference M8, json_utils.py:39-348)
+# 8. JSON extraction (reference M8, json_utils.py:39-348)
 # ---------------------------------------------------------------------------
-
-EXPECTED_FIELDS_BY_MODE = {
-    "describe": ("description", "tags"),
-    "detect": ("objects", "description"),
-    "document": ("text", "document_type"),
-}
 
 
 def _balanced_candidates(text: str) -> list[str]:
@@ -1346,13 +1339,6 @@ def extract_json_from_text(
                 except (json.JSONDecodeError, ValueError):
                     continue
     return None
-
-
-def validate_json_structure(obj: dict | None, mode: str = "describe") -> bool:
-    if not isinstance(obj, dict):
-        return False
-    fields = EXPECTED_FIELDS_BY_MODE.get(mode, EXPECTED_FIELDS_BY_MODE["describe"])
-    return all(f in obj for f in fields)
 
 
 # ---------------------------------------------------------------------------
@@ -2005,7 +1991,11 @@ def decode_apng_frames(data: bytes | None) -> dict | None:
         if not parts:
             return None
         try:
-            raw = zlib.decompress(b"".join(parts))
+            # inflate only the frame's filtered scanlines: an IDAT/fdAT
+            # bomb stops at fh * (fw * ch + 1) bytes, as in decode_png
+            raw = zlib.decompressobj().decompress(
+                b"".join(parts), fh * (fw * ch + 1)
+            )
         except zlib.error:
             return None
         px = _png_unfilter(raw, fw, fh, ch)
@@ -6245,11 +6235,11 @@ def _parse_mp3_meta(data: bytes) -> dict[str, str]:
     out["mp3:sample_rate"] = str(rate)
     out["mp3:bitrate_kbps"] = ("vbr~" if vbr else "") + str(bitrate)
     out["mp3:duration_s"] = f"{total_samples / rate:.3f}"
-    # rounds 6-7: decode-subset verdict — '1' iff every frame sits
-    # inside the REAL decoder family's documented subset (decode_mp3 via
-    # the side-info walk; decode_mp2/mp1 via their mode/table gates —
-    # the key name keeps its round-6 spelling because the stage and
-    # lineage stub accounting both gate on it).
+    # decode-subset verdict — '1' iff every frame sits inside the REAL
+    # decoder family's documented subset (decode_mp3 via the side-info
+    # walk; decode_mp2/mp1 via their mode/table gates). It gates the mp3
+    # row of stages/multimodal.DECODE_TABLE (the key keeps its Layer-III
+    # name although it covers all three layers).
     out["mp3:l3_subset"] = "1" if subset else "0"
     out.update(_mp3_xing(data, _id3v2_size(data)))
     out.update(_parse_id3v1(data))
@@ -11326,7 +11316,7 @@ def decode_mp3(data: bytes | None) -> dict | None:
     (rate, n_channels, n_samples, duration_s, rms, peak, zero_crossings),
     float PCM channels averaged to mono. None on malformed or
     out-of-subset input (see the 9c⁵ section header for the documented
-    subset) — those rows stay in the honest `stubbed` lineage tier."""
+    subset); meta['mp3:l3_subset'] keeps out-of-subset rows `stubbed`."""
     if not data:
         return None
     p = _id3v2_size(data)
@@ -12196,6 +12186,20 @@ def decode_mp1(data: bytes | None) -> dict | None:
         return None
 
 
+def decode_mpeg_audio(data: bytes | None) -> dict | None:
+    """MPEG-1 audio decode through the decoder of the layer that the first
+    frame header names (decode_mp1 / decode_mp2 / decode_mp3). Each of
+    them rejects a frame of another layer, so no other one could succeed."""
+    if not data:
+        return None
+    p = _id3v2_size(data)
+    if p + 2 > len(data):
+        return None
+    layer = 4 - ((data[p + 1] >> 1) & 3)
+    fn = {1: decode_mp1, 2: decode_mp2, 3: decode_mp3}.get(layer)
+    return fn(data) if fn else None
+
+
 def mp1_tone_encode(
     band_k: int, amp_exp: int, rate: int = 32000, bitrate_kbps: int = 64,
     amp_exp_r: int | None = None,
@@ -12721,10 +12725,10 @@ def analyze_document(
 # 0..255 samples, so no +128 level shift).
 #
 # DOCUMENTED SUBSET (out-of-scope streams return None and stay in the
-# honest `stubbed` lineage tier, like mp3/vorbis; the envelope walk
-# publishes the verdict as meta['mpeg:ip_subset'] — and the narrower
-# meta['mpeg:i_subset'] — so the stage and lineage gates stay in sync
-# without decoding payloads):
+# honest `stubbed` tier, like out-of-subset mp3; the envelope walk
+# publishes the verdict as meta['mpeg:ipb_subset'], the gate of the
+# mpeg row of stages/multimodal.DECODE_TABLE that both the feature stage
+# and the lineage stub counters read, without decoding payloads):
 #   * video ELEMENTARY streams only (0x000001B3 first; program streams,
 #     0x000001BA packs, stay envelope-only),
 #   * I and (round-6 extension) P pictures — forward motion compensation
@@ -13568,11 +13572,10 @@ def _mpeg_decode_b_picture(
 def _parse_mpeg_meta(data: bytes) -> dict[str, str]:
     """MPEG-1 video elementary stream envelope: geometry, picture rate,
     picture count/types from the start-code walk — no payload decode.
-    Publishes the decode_mpeg1 subset verdicts so the multimodal stage
-    and lineage stub accounting share one gate (the mp3:l3_subset
-    pattern): meta['mpeg:i_subset'] (pure-I streams, the round-6 tier)
-    and meta['mpeg:ip_subset'] (I+P with forward MC — implied by
-    i_subset; the stage gates on this wider one)."""
+    Publishes the decode_mpeg1 subset verdicts: meta['mpeg:i_subset']
+    (pure-I streams), meta['mpeg:ip_subset'] (I+P with forward MC) and
+    meta['mpeg:ipb_subset'] (I+P+B, each implying the next), the widest
+    of which gates the mpeg row of stages/multimodal.DECODE_TABLE."""
     if len(data) < 12 or data[:4] != b"\x00\x00\x01\xb3":
         return {}
     out = {"mpeg:kind": "video-es"}

@@ -1,71 +1,45 @@
-"""Multimodal column plumbing (images/audio/video as opaque binary).
+"""Media decode stages: content bytes in, per-blob features out.
 
-Round 2 made PNG decode real (pure.decode_png: IDAT inflate + scanline
-unfilter). Round 3: **EVERY raster format decodes for real** — baseline
-JPEG (marker walk, canonical Huffman, integer IDCT, 4:4:4/4:2:0/4:2:2
-chroma — the format a real CC image corpus is mostly made of), BMP
-(uncompressed BI_RGB), GIF (LZW + palette + interlace), and baseline TIFF
-(II/MM tag walk, multi-strip) — producing per-channel means, a luminance
-histogram, and a 64-bit average-hash (perceptual fingerprint for image
-dedup). Round 4: FLAC decodes for real too (pure.decode_flac — RFC 9639
-frame walk, fixed/LPC subframes, Rice residuals, stereo decorrelation),
-so lossless audio joins PCM WAV in the real-decode tier. Only
-DSP-pipeline audio (ogg-vorbis/mp3/aac) and compressed-video containers
-remain STUBS — a deterministic fake keyed on the content bytes, clearly
-marked. Everything Spark-side is real and tested: schema, Arrow batch
-shape, `mapInPandas` signature, partition behavior.
+Each blob is sniffed (pure.sniff_bytes), its container envelope is parsed
+(pure.extract_metadata), and DECODE_TABLE decides the rest. A row names a
+content type, an optional `meta` gate, one of this repo's pure-Python
+decoders and a featurizer:
 
-PCM WAV decode is real (stdlib wave + integer math — pure.decode_wav):
-rms / peak / zero-crossing-rate / duration as the audio feature vector.
-So is Y4M video (pure.decode_y4m: YUV4MPEG2 header + raw planes — frame
-iteration, even frame-sampling, per-sampled-frame luminance means).
+  decoded       the first row for the content type whose gate passes
+                decoded the payload: raster images, WAV/FLAC, MJPEG AVI
+                and MP4, MPEG-1 video (I/P/B), MPEG-1 audio layers I-III,
+                VP8L WebP, Vorbis and Y4M; the features are real
+  decode_error  that row's decoder returned None (malformed or truncated
+                payload); the feature is a deterministic hash of the bytes
+  stubbed       a content type the table names, but no row's gate passes
+                (opus, non-MJPEG AVI/MP4, lossy WebP, WebM, AAC, AVIF/HEIC,
+                MPEG streams outside the decoders' subsets): the envelope
+                still parses into `meta`, the feature is the byte hash
+  skipped       not a media type
 
-decode_status taxonomy:
-  decoded      real decode succeeded (any raster format, PCM WAV, FLAC,
-               or Y4M; features real)
-  decode_error bytes sniffed as a decodable-for-real type but malformed
-               (incl. arithmetic/lossless JPEG; progressive SOF2 decodes
-               for REAL as of round 4)
-  stubbed      decodable media type with no pure-Python DSP codec (ogg/
-               mp3 audio, mp4/webm video, non-WAVE riff — avi etc.);
-               their container envelopes still parse for real into the
-               metadata map (round 4)
-  skipped      not a media type
-
-Design mirrors the reference's per-mode preprocessing tiers
-(/root/reference/src/core/vision.py:211-304 — describe 512² / detect 384² /
-document 768² letterboxed resize): mode picks the target shape.
+lineage.commit_lineage counts stubbed rows with stub_type(), the Spark
+expression generated from the same table, so a run's counters say what
+this stage did. The mode picks the target resolution, as the reference's
+per-mode preprocessing tiers do (describe 512², detect 384², document
+768²).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import reduce
+from operator import or_
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fa_spark import pure
 
 MODE_RESOLUTION = {"describe": 512, "detect": 384, "document": 768}
-
-# container families the feature stage recognizes but has no pure-Python
-# DSP codec for (their ENVELOPES still parse for real); riff is stubbed
-# only for non-WAVE forms — WAVE decodes via pure.decode_wav — ogg only
-# for non-Vorbis codecs (opus etc.) — Vorbis decodes for real as of
-# round 5 via pure.decode_vorbis — and webp only for lossy/extended
-# payloads without an embedded VP8L still — lossless decodes for real
-# as of round 8 via pure.decode_webp_lossless. Shared with lineage stub
-# accounting (lineage.commit_lineage) so the two stay in sync.
-STUB_CONTAINER_TYPES = (
-    "ogg", "riff", "mp3", "mp4", "webm", "mpeg", "webp", "aac",
-    # round 8: AVIF/HEIF image envelopes parse (ispe dims, pixi bit
-    # depth, codec config fourcc); AV1/HEVC payload decode stays the
-    # documented stub tier beside VP9
-    "avif", "heic",
-)
 
 MEDIA_FEATURES = T.StructType(
     [
@@ -85,37 +59,15 @@ MEDIA_FEATURES = T.StructType(
 FEATURE_DIM = 16
 
 
-_RASTER_DECODERS = {
-    "png": pure.decode_png,
-    "jpeg": pure.decode_jpeg,
-    "jpeg_exif": pure.decode_jpeg,
-    "bmp": pure.decode_bmp,
-    "gif": pure.decode_gif,
-    "tiff": pure.decode_tiff,
-    # round 8: favicons — PNG-in-ICO via decode_png, BMP-in-ICO via
-    # decode_bmp with the synthesized file header (pure.decode_ico)
-    "ico": pure.decode_ico,
-}
-
-
-def _decode_raster(ct: str, b: bytes):
-    """Dispatch to the real pure-Python raster codec for a sniffed type —
-    ALL raster image formats decode for real as of round 3 (PNG round 2;
-    JPEG/BMP/GIF/TIFF round 3). None = not a raster type."""
-    fn = _RASTER_DECODERS.get(ct)
-    return fn(b) if fn else None
-
-
 def _fake_decode(data: bytes, target_res: int) -> list[float]:
-    """Deterministic stand-in for decode+resize+feature-extract for formats
-    whose codecs are not in this container (ogg/compressed video). The
-    fake hashes the bytes into a fixed-dim float vector so downstream
-    plumbing (schema, similarity join, batching) is fully exercisable."""
+    """Deterministic stand-in feature for payloads that did not decode:
+    the bytes hashed into a fixed-dim float vector, so downstream plumbing
+    (schema, similarity join, batching) stays exercisable."""
     h = hashlib.sha256(data + str(target_res).encode()).digest()
     return [round(((h[i] / 255.0) * 2 - 1), 6) for i in range(FEATURE_DIM)]
 
 
-def _real_raster_features(img: dict) -> tuple[list[float], int]:
+def _raster_features(img: dict) -> tuple[list[float], int]:
     """FEATURE_DIM-float vector from a real raster decode (every raster
     codec returns the same {width,height,channels,pixels} dict):
     [mean_r, mean_g, mean_b, width, height, 8 luminance-histogram
@@ -133,7 +85,7 @@ def _real_raster_features(img: dict) -> tuple[list[float], int]:
     return vec[:FEATURE_DIM], ah
 
 
-def _real_y4m_features(vid: dict) -> list[float]:
+def _video_features(vid: dict) -> tuple[list[float], None]:
     """FEATURE_DIM floats from a real video decode: [n_frames, width,
     height, fps, duration_s, n_sampled, sampled-frame luminance means...]"""
     vec = [
@@ -145,12 +97,12 @@ def _real_y4m_features(vid: dict) -> list[float]:
         float(len(vid["sampled_frames"])),
     ]
     vec += [round(m, 6) for m in vid["frame_means"]]
-    return (vec + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
+    return (vec + [0.0] * FEATURE_DIM)[:FEATURE_DIM], None
 
 
-def _real_wav_features(aud: dict) -> list[float]:
-    """FEATURE_DIM floats from a real PCM decode: [rms, peak, zcr,
-    n_samples, rate, duration_s, channels, 0-padding]."""
+def _audio_features(aud: dict) -> tuple[list[float], None]:
+    """FEATURE_DIM floats from a real audio decode: [rms, peak, zcr,
+    n_samples, rate, duration_s, channels, codec, 0-padding]."""
     vec = [
         round(aud["rms"], 6),
         # rounded BEFORE the float32 feature-array store so the stored
@@ -164,12 +116,130 @@ def _real_wav_features(aud: dict) -> list[float]:
         float(aud["rate"]),
         round(aud["duration_s"], 6),
         float(aud["n_channels"]),
-        # round 6: source-codec tag (0 pcm/other, 1 ima_adpcm, 2 mulaw,
+        # WAV source-codec tag (0 pcm/other, 1 ima_adpcm, 2 mulaw,
         # 3 alaw) — lets the wav_codec_features oracle verify DISPATCH,
         # not just feature values
         float(aud.get("codec", 0)),
     ]
-    return (vec + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
+    return (vec + [0.0] * FEATURE_DIM)[:FEATURE_DIM], None
+
+
+class Gate(NamedTuple):
+    """``meta[key]`` holds one of ``values`` — upper-cased first when
+    ``fold``, or as any item of its comma-separated list when ``items``.
+    A missing key never passes. ``passes`` reads a Python meta dict (the
+    stage), ``expr`` a Spark map column (lineage): one rule, two readers."""
+
+    key: str
+    values: tuple[str, ...]
+    fold: bool = False
+    items: bool = False
+
+    def passes(self, meta: dict) -> bool:
+        v = meta.get(self.key, "")
+        if self.items:
+            return not set(v.split(",")).isdisjoint(self.values)
+        return (v.upper() if self.fold else v) in self.values
+
+    def expr(self, meta: Column) -> Column:
+        v = F.coalesce(meta.getItem(self.key), F.lit(""))
+        if self.items:
+            return F.arrays_overlap(
+                F.split(v, ","), F.array(*map(F.lit, self.values))
+            )
+        return (F.upper(v) if self.fold else v).isin(*self.values)
+
+
+class Codec(NamedTuple):
+    """One DECODE_TABLE row: a blob sniffed as ``ct`` whose meta passes
+    ``gate`` (None: every blob) decodes through ``decode`` and is
+    featurized by ``features`` -> (feature vector, aHash or None). A row
+    without a decoder names a container whose envelope parses but whose
+    payload has no codec here: its blobs are always stubbed."""
+
+    ct: str
+    decode: Callable[[bytes], dict | None] | None = None
+    features: Callable[[dict], tuple] | None = None
+    gate: Gate | None = None
+
+    def takes(self, meta: dict) -> bool:
+        return self.decode is not None and (
+            self.gate is None or self.gate.passes(meta)
+        )
+
+    def takes_expr(self, meta: Column) -> Column:
+        if self.decode is None:
+            return F.lit(False)
+        return F.lit(True) if self.gate is None else self.gate.expr(meta)
+
+
+_RASTER_DECODERS = {
+    "png": pure.decode_png,
+    "jpeg": pure.decode_jpeg,
+    "jpeg_exif": pure.decode_jpeg,
+    "bmp": pure.decode_bmp,
+    "gif": pure.decode_gif,
+    "tiff": pure.decode_tiff,
+    # favicons: PNG-in-ICO via decode_png, BMP-in-ICO via decode_bmp with
+    # a synthesized file header (pure.decode_ico)
+    "ico": pure.decode_ico,
+}
+
+# the first row whose gate passes decodes; gate keys come from the envelope
+# walks of pure.extract_metadata (a test pins that each one is emitted)
+DECODE_TABLE: tuple[Codec, ...] = (
+    *(Codec(ct, fn, _raster_features) for ct, fn in _RASTER_DECODERS.items()),
+    Codec("riff", pure.decode_wav, _audio_features,
+          Gate("riff:format", ("WAVE",))),
+    Codec("flac", pure.decode_flac, _audio_features),
+    # frame chunks are complete JPEGs through this repo's JPEG decoder
+    Codec("riff", pure.decode_avi_mjpeg, _video_features,
+          Gate("avi:codec", ("MJPG", "MJPEG"), fold=True)),
+    # MJPEG when ANY trak carries a jpeg/mjpa sample entry
+    Codec("mp4", pure.decode_mp4_mjpeg, _video_features,
+          Gate("mp4:codecs", ("jpeg", "mjpa"), items=True)),
+    # I, P and B pictures; D pictures and streams past the frame or
+    # geometry bounds stay stubbed (pure._parse_mpeg_meta)
+    Codec("mpeg", pure.decode_mpeg1, _video_features,
+          Gate("mpeg:ipb_subset", ("1",))),
+    # Layers I-III; every frame inside its layer decoder's documented
+    # subset (pure._mpeg_audio_subset_frame)
+    Codec("mp3", pure.decode_mpeg_audio, _audio_features,
+          Gate("mp3:l3_subset", ("1",))),
+    # VP8L, bare or as the still of a VP8X container
+    Codec("webp", pure.decode_webp_lossless, _raster_features,
+          Gate("webp:format", ("lossless",))),
+    Codec("webp", pure.decode_webp_lossless, _raster_features,
+          Gate("webp:has_vp8l", ("1",))),
+    Codec("ogg", pure.decode_vorbis, _audio_features,
+          Gate("ogg:codec", ("vorbis",))),
+    Codec("y4m", pure.decode_y4m, _video_features),
+    # envelope only: WebM (VP8/VP9), AAC, AVIF/HEIF (AV1/HEVC payloads)
+    *(Codec(ct) for ct in ("webm", "aac", "avif", "heic")),
+)
+
+_ROWS_BY_CT = {
+    c: tuple(r for r in DECODE_TABLE if r.ct == c)
+    for c in dict.fromkeys(r.ct for r in DECODE_TABLE)
+}
+
+
+def stub_type(ct: Column, meta: Column) -> Column:
+    """``ct`` where the feature stage would mark the blob ``stubbed`` (a
+    content type DECODE_TABLE names, no row taking it), else NULL —
+    generated from the table, over sniffed content-type and meta columns."""
+    stubbed = reduce(or_, [
+        (ct == c) & ~reduce(or_, [r.takes_expr(meta) for r in rows])
+        for c, rows in _ROWS_BY_CT.items()
+    ])
+    return F.when(stubbed, ct)
+
+
+def _decode_raster(ct: str, b: bytes):
+    """The raster rows' decode of a sniffed blob; None when ``ct`` is not
+    a raster type or the payload is malformed."""
+    fn = _RASTER_DECODERS.get(ct)
+    return fn(b) if fn else None
 
 
 def media_features_fn(mode: str = "describe"):
@@ -178,16 +248,14 @@ def media_features_fn(mode: str = "describe"):
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # columnar accumulation (round 9): building a dict per row and
-            # letting pandas re-pivot 10 columns out of row dicts cost
-            # ~10% of the stage; appending straight to per-column lists
-            # yields the identical frame
+            # columnar accumulation: appending straight to per-column
+            # lists is ~10% cheaper than letting pandas pivot row dicts
             cols: dict[str, list] = {
                 f.name: [] for f in MEDIA_FEATURES.fields
             }
             for mid, data in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(data) if data is not None else b""
-                sn = pure.sniff_bytes(b)
+                ct = pure.sniff_bytes(b)["content_type"]
                 meta = pure.extract_metadata(b)
                 width = height = None
                 for fam in ("png", "jpeg", "gif", "bmp", "tiff", "avif",
@@ -196,149 +264,20 @@ def media_features_fn(mode: str = "describe"):
                         width = meta.get(f"{fam}:width")
                         height = meta.get(f"{fam}:height")
                         break
-                ct = sn["content_type"]
-                is_wav = ct == "riff" and b[8:12] == b"WAVE"
-                # stubbable media: formats we recognize but have no pure-
-                # Python codec for (DSP-pipeline audio, compressed video,
-                # non-WAVE riff containers like avi) — the CONTAINER
-                # envelopes still parse for real into `meta` (round 4)
-                decodable = ct in STUB_CONTAINER_TYPES
+                rows = _ROWS_BY_CT.get(ct, ())
+                row = next((r for r in rows if r.takes(meta)), None)
                 status, feature, ahash = "skipped", None, None
-                if ct in _RASTER_DECODERS:
-                    img = _decode_raster(ct, b)
-                    if img is not None:
-                        status = "decoded"
-                        width, height = img["width"], img["height"]
-                        feature, ahash = _real_raster_features(img)
-                    else:
+                if row is not None:
+                    dec = row.decode(b)
+                    if dec is None:
                         status = "decode_error"
                         feature = _fake_decode(b, target)
-                elif is_wav or ct == "flac":
-                    aud = pure.decode_wav(b) if is_wav else pure.decode_flac(b)
-                    if aud is not None:
-                        status = "decoded"
-                        feature = _real_wav_features(aud)
                     else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif ct == "riff" and meta.get("avi:codec", "").strip().upper() in (
-                    "MJPG", "MJPEG",
-                ):
-                    # round 5: Motion-JPEG AVI decodes for REAL — frame
-                    # chunks are complete JPEGs through this repo's own
-                    # JPEG decoder (pure.decode_avi_mjpeg); other AVI
-                    # codecs stay in the stub branch below
-                    vid = pure.decode_avi_mjpeg(b)
-                    if vid is not None:
                         status = "decoded"
-                        width, height = vid["width"], vid["height"]
-                        feature = _real_y4m_features(vid)
-                    else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif ct == "mp4" and (
-                    set(meta.get("mp4:codecs", "").split(","))
-                    & {"jpeg", "mjpa"}
-                ):
-                    # round 5: MJPEG-in-MP4 decodes for real — sample
-                    # tables resolved, frames through the JPEG decoder
-                    # (pure.decode_mp4_mjpeg); other mp4 codecs stub
-                    vid = pure.decode_mp4_mjpeg(b)
-                    if vid is not None:
-                        status = "decoded"
-                        width, height = vid["width"], vid["height"]
-                        feature = _real_y4m_features(vid)
-                    else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif ct == "mpeg" and meta.get("mpeg:ipb_subset") == "1":
-                    # round 6: real MPEG-1 video decode — I pictures
-                    # (slice/macroblock/block parse, DC prediction,
-                    # run-level AC VLCs, intra dequant, exact int64
-                    # IDCT), P pictures (forward motion compensation
-                    # at full/half pel, skip runs, non-intra residuals —
-                    # pure.decode_mpeg1/_mpeg_decode_p_picture) AND B
-                    # pictures (bidirectional MC with interpolated
-                    # prediction, B skip semantics, temporal_reference
-                    # display reordering — _mpeg_decode_b_picture). The
-                    # envelope walk publishes the subset verdict as
-                    # meta['mpeg:ipb_subset'], the same stage/lineage
-                    # shared gate as mp3:l3_subset. Round 7: all
-                    # f_codes 1-7 decode (motion_r residual bits); only
-                    # D streams fall through to the stub branch below.
-                    vid = pure.decode_mpeg1(b)
-                    if vid is not None:
-                        status = "decoded"
-                        width, height = vid["width"], vid["height"]
-                        feature = _real_y4m_features(vid)
-                    else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif ct == "mp3" and (
-                    (aud := pure.decode_mp3(b)) is not None
-                    or (aud := pure.decode_mp2(b)) is not None
-                    or (aud := pure.decode_mp1(b)) is not None
-                ):
-                    # rounds 5-7: ALL THREE MPEG-1 audio layers decode
-                    # for real — Layer III (side info + bit reservoir +
-                    # Huffman + requantize + alias reduction + IMDCT +
-                    # synthesis, pure.decode_mp3, incl. M/S joint
-                    # stereo), Layer II (Table B.2a bit allocation +
-                    # grouped requantization, pure.decode_mp2), Layer I
-                    # (table-A, pure.decode_mp1 — mono/stereo/dual for
-                    # Layers I/II as of round 7); the sniffer types all
-                    # layers 'mp3', the raw MPEG-audio family; Layer
-                    # III intensity stereo (mode_ext 01) also decodes
-                    # as of late round 7. Only out-of-subset streams
-                    # (M/S+intensity combined, intensity in Layers
-                    # I/II, Huffman ESC tables beyond the pure.py
-                    # subset, allocation tables B.2b/c/d — see the
-                    # pure.py section headers) return None from their
-                    # decoder and keep the honest stubbed tier below;
-                    # the gate is the decode itself, like ogg's codec
-                    # gate.
-                    status = "decoded"
-                    feature = _real_wav_features(aud)
-                elif ct == "webp" and (
-                    meta.get("webp:format") == "lossless"
-                    or meta.get("webp:has_vp8l") == "1"
-                ):
-                    # round 8: real VP8L decode (canonical prefix codes,
-                    # all four transforms, color cache, LZ77 —
-                    # pure.decode_webp_lossless); webp leaves the stub
-                    # tier for lossless payloads. VP8-lossy and VP8X
-                    # payloads stay in the stub branch below, the
-                    # AVC/VP9 envelope tier.
-                    img = pure.decode_webp_lossless(b)
-                    if img is not None:
-                        status = "decoded"
-                        width, height = img["width"], img["height"]
-                        feature, ahash = _real_raster_features(img)
-                    else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif ct == "ogg" and meta.get("ogg:codec") == "vorbis":
-                    # round 5: real Vorbis decode (floor1 + residue +
-                    # IMDCT, pure.decode_vorbis) — ogg leaves the stub
-                    # tier for vorbis payloads; opus/other ogg codecs
-                    # fall through to the stub branch below
-                    aud = pure.decode_vorbis(b)
-                    if aud is not None:
-                        status = "decoded"
-                        feature = _real_wav_features(aud)
-                    else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif ct == "y4m":
-                    vid = pure.decode_y4m(b)
-                    if vid is not None:
-                        status = "decoded"
-                        width, height = vid["width"], vid["height"]
-                        feature = _real_y4m_features(vid)
-                    else:
-                        status = "decode_error"
-                        feature = _fake_decode(b, target)
-                elif decodable:
+                        feature, ahash = row.features(dec)
+                        if "width" in dec:  # images and video, not audio
+                            width, height = dec["width"], dec["height"]
+                elif rows:
                     status = "stubbed"
                     feature = _fake_decode(b, target)
                 cols["media_id"].append(mid)

@@ -266,6 +266,15 @@ def test_stub_counters_in_lineage(spark, pages_df, base):
             [pure.jpeg_encode([[(60, 60, 60)] * 16] * 16)]), None, "en"),
         ("http://m.example/h.avi", TS1,
          pure.avi_envelope_encode(4, codec=b"XVID"), None, "en"),
+        # I+P+B MPEG-1 video, VP8L webp and Layer II mp3 decode for real
+        # — NOT stubs (the stage's decode table gates each of them)
+        ("http://m.example/j.mpg", TS1, pure.mpeg1_encode_ipb(
+            [[40] * 16 + [64] * 16 + [88] * 16 for _ in range(16)],
+            -16, [("interp",)]), None, "en"),
+        ("http://m.example/k.webp", TS1,
+         pure.webp_vp8l_encode([[(9, 80, 200)] * 4] * 4), None, "en"),
+        ("http://m.example/l.mp3", TS1,
+         pure.mp2_tone_encode(3, 1), None, "en"),
     ]
     pages = pages_df.select("url", "warc_ts", "html", "text", "lang").limit(
         30
@@ -281,7 +290,8 @@ def test_stub_counters_in_lineage(spark, pages_df, base):
         F.sum("stubbed_rows").alias("n"),
     ).collect()[0]
     # two joint-stereo mp3 + one mp4 + one opus + one xvid-avi; wav,
-    # vorbis, mjpeg-avi and the in-subset mp3 decode for real
+    # vorbis, mjpeg-avi, I+P+B mpeg, vp8l webp and the in-subset Layer
+    # II/III mp3 decode for real
     assert agg["n"] == 5
     by_type: dict[str, int] = {}
     for row in counters.collect():

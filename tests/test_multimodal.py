@@ -258,3 +258,83 @@ def test_mp3_decodes_joint_stereo_stays_stubbed(spark):
     assert out["sil"]["decode_status"] == "decoded"
     assert out["sil"]["feature"][0] == 0.0  # digital silence
     assert out["js"]["decode_status"] == "stubbed"
+
+
+def test_decode_table_gates_agree_with_lineage(spark):
+    """The feature stage and lineage's stub counters read one decode
+    table: on a fixture for each side of each `meta` gate, the stage says
+    `stubbed` exactly when stub_type() (commit_lineage's stub column,
+    over the analyzer's sniff and meta) names a type. Every gate key is
+    also emitted by pure.extract_metadata for a fixture of its content
+    type, so a renamed key cannot switch a gate off without failing here."""
+    from fa_spark import pure
+    from fa_spark.stages.analyze import analysis_udf
+    from fa_spark.stages.multimodal import DECODE_TABLE, stub_type
+
+    jpeg = pure.jpeg_encode([[(60, 60, 60)] * 16] * 16)
+    vp8l = pure.webp_vp8l_encode([[(9, 80, 200)] * 4] * 4)
+    i = vp8l.index(b"VP8L")
+    vp8x = b"WEBP" + b"VP8X" + (10).to_bytes(4, "little") + bytes(4) + (
+        (3).to_bytes(3, "little") * 2
+    ) + vp8l[i:]  # a VP8L still inside the extended container
+    mpeg_i = pure.mpeg1_encode([[[50] * 16 for _ in range(16)]] * 2)
+    d_pic = bytearray(mpeg_i)  # first picture_coding_type -> D (4)
+    at = mpeg_i.find(b"\x00\x00\x01\x00") + 5
+    d_pic[at] = (d_pic[at] & 0b11000111) | (4 << 3)
+    fixtures = {
+        "wav": (pure.wav_encode([0, 80, -80, 40] * 200), "decoded"),
+        "avi_mjpg": (pure.avi_mjpeg_encode([jpeg]), "decoded"),
+        "avi_xvid": (pure.avi_envelope_encode(4, codec=b"XVID"), "stubbed"),
+        "mp4_jpeg": (pure.mp4_mjpeg_encode([jpeg]), "decoded"),
+        "mp4_mp4a": (pure.mp4_envelope_encode(1.5, codec=b"mp4a"), "stubbed"),
+        "mpeg_i": (mpeg_i, "decoded"),
+        "mpeg_ipb": (pure.mpeg1_encode_ipb(
+            [[40] * 16 + [64] * 16 + [88] * 16 for _ in range(16)],
+            -16, [("interp",)]), "decoded"),
+        "mpeg_d": (bytes(d_pic), "stubbed"),
+        "mp3_l3": (pure.mp3_tone_encode(3, 1), "decoded"),
+        "mp3_l2": (pure.mp2_tone_encode(3, 1), "decoded"),
+        "mp3_js": (pure.mp3_envelope_encode(2, joint_stereo=True), "stubbed"),
+        "webp_vp8l": (vp8l, "decoded"),
+        "webp_vp8x": (
+            b"RIFF" + len(vp8x).to_bytes(4, "little") + vp8x, "decoded"
+        ),
+        "webp_lossy": (pure.webp_encode_envelope("lossy", 4, 4), "stubbed"),
+        "vorbis": (pure.vorbis_tone_encode(2, 0.5, 4), "decoded"),
+        "opus": (pure.ogg_envelope_encode(codec="opus"), "stubbed"),
+        "avif": (pure.avif_envelope_encode(4, 4), "stubbed"),
+        "png": (pure.png_encode([[(1, 2, 3)] * 4] * 4), "decoded"),
+        "html": (b"<html><body><p>not media</p></body></html>", "skipped"),
+    }
+    df = spark.createDataFrame(
+        [(k, b) for k, (b, _) in fixtures.items()],
+        "media_id string, content binary",
+    )
+    status = {
+        r["media_id"]: r["decode_status"]
+        for r in extract_media_features(df).collect()
+    }
+    a = analysis_udf(("sniff", "meta"))("content")
+    stub = {
+        r["media_id"]: r["stub"]
+        for r in df.select(
+            "media_id", a.alias("a")
+        ).select(
+            "media_id",
+            stub_type(F.col("a.sniff.content_type"), F.col("a.meta"))
+            .alias("stub"),
+        ).collect()
+    }
+    assert status == {k: want for k, (_, want) in fixtures.items()}
+    for k, st in status.items():
+        assert (st == "stubbed") == (stub[k] is not None), k
+
+    by_ct: dict[str, list[dict]] = {}
+    for b, _ in fixtures.values():
+        ct = pure.sniff_bytes(b)["content_type"]
+        by_ct.setdefault(ct, []).append(pure.extract_metadata(b))
+    for row in DECODE_TABLE:
+        if row.gate is not None:
+            assert any(
+                row.gate.key in m for m in by_ct.get(row.ct, ())
+            ), (row.ct, row.gate.key)

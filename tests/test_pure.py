@@ -129,10 +129,26 @@ def test_json_truncated_repetitive():
     assert pure.extract_json_from_text(txt) is None
 
 
+_EXPECTED_FIELDS_BY_MODE = {
+    "describe": ("description", "tags"),
+    "detect": ("objects", "description"),
+    "document": ("text", "document_type"),
+}
+
+
+def _validate_json_structure(obj: dict | None, mode: str = "describe") -> bool:
+    if not isinstance(obj, dict):
+        return False
+    fields = _EXPECTED_FIELDS_BY_MODE.get(
+        mode, _EXPECTED_FIELDS_BY_MODE["describe"]
+    )
+    return all(f in obj for f in fields)
+
+
 def test_validate_structure_modes():
-    assert pure.validate_json_structure({"text": "x", "document_type": "y"}, "document")
-    assert not pure.validate_json_structure({"text": "x"}, "document")
-    assert pure.validate_json_structure(
+    assert _validate_json_structure({"text": "x", "document_type": "y"}, "document")
+    assert not _validate_json_structure({"text": "x"}, "document")
+    assert _validate_json_structure(
         {"objects": [], "description": ""}, "detect"
     )
 
@@ -2069,6 +2085,38 @@ def test_zip_mimetype_bomb_read_is_bounded():
     assert peak < 4 << 20, peak
     assert meta["zip:valid"] == "true" and meta["zip:subtype"] == "epub"
     assert ex.doc_type == "epub"
+
+
+def test_apng_frame_inflate_is_bounded():
+    """A 1x1 APNG frame whose IDAT inflates to 64 MiB is inflated only up
+    to the frame's fh * (fw * ch + 1) scanline bytes, as decode_png's
+    IDAT is: the clip still decodes and the peak stays small."""
+    import tracemalloc
+
+    def chunk(ctype: bytes, body: bytes) -> bytes:
+        crc = zlib.crc32(ctype + body)
+        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
+
+    bomb = zlib.compress(b"\x00" * (64 << 20), 9)
+    data = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 0))
+        + chunk(b"acTL", struct.pack(">II", 1, 0))
+        + chunk(b"fcTL", struct.pack(">IIIIIHHBB", 0, 1, 1, 0, 0, 1, 10, 0, 0))
+        + chunk(b"IDAT", bomb)
+        + chunk(b"IEND", b"")
+    )
+    assert (64 << 20) // len(data) >= 1000
+
+    tracemalloc.start()
+    try:
+        clip = pure.decode_apng_frames(data)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+    assert clip is not None and clip["n_frames"] == 1
+    assert clip["frame_means"] == [0.0]
 
 
 def test_woff_rejects_incomplete_zlib_table():
